@@ -425,7 +425,7 @@ def widevocab_surface_stats(corpus_path: str, model_dir: str) -> dict:
             F.max("count").alias("max_bucket_size"),
         ).collect()[0]
         # post-split residue: sub-buckets of the oversized set still > cap
-        # (these are what _banded_ok_buckets actually DROPS)
+        # (these are what the split/cap policy actually DROPS)
         oversized_keys = sizes.where(F.col("count") > 200).select("type", "sig")
         split = buckets.join(F.broadcast(oversized_keys), ["type", "sig"], "left_semi").select(
             "type",
@@ -448,7 +448,7 @@ def widevocab_surface_stats(corpus_path: str, model_dir: str) -> dict:
         buckets.unpersist()
         sizes.unpersist()
         # post-policy histogram from the library's OWN banding pipeline
-        # (_banded_ok_buckets via lsh_bucket_histogram) — the round-5
+        # (_banded_bucket_frames via lsh_bucket_histogram) — the round-5
         # verdict #3 evidence that the cap, not the policy, bounds the
         # in-bucket join mass
         from nametag_spark.kg.resolution import lsh_bucket_histogram, release_persisted
@@ -756,7 +756,7 @@ def main() -> None:
     # "constant by construction". This corpus scales the SURFACE vocabulary
     # 10x instead, giving the LSH/CC stages a measured slope of their own;
     # bucket-cap behavior is recorded alongside (oversized buckets dropped
-    # by the capped-bucket join, resolution._banded_ok_buckets).
+    # by the bucket kernel, resolution._make_bucket_pair_kernel).
     wv_scale = int(os.environ.get("SPARK_GRAFT_WIDEVOCAB_SCALE", "10"))
     wv_sizes = [
         int(x)

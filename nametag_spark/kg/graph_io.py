@@ -236,7 +236,7 @@ def build_knowledge_graph(
     "resumed": [...]}.
     """
     from ..ner.pipeline import recognize_df
-    from .resolution import resolve_entities
+    from .resolution import entity_table, resolve_entities
     from .triples import extract_triples
 
     config = dict(config or {})
@@ -261,23 +261,10 @@ def build_knowledge_graph(
     )
 
     def build_entity_table():
-        surf = mention_entities.groupBy("entity_id", "type", "norm").agg(
-            F.count(F.lit(1)).alias("n_mentions")
-        )
-        # single min_by agg (no window): highest n_mentions, ties lexical asc
-        return surf.groupBy("entity_id").agg(
-            F.min_by(
-                F.struct(F.col("norm"), F.col("type")),
-                F.struct((-F.col("n_mentions")).alias("_negn"), F.col("norm").alias("_n")),
-            ).alias("_c"),
-            F.sum("n_mentions").alias("n_mentions"),
-            F.count(F.lit(1)).alias("n_surfaces"),
-        ).select(
-            "entity_id",
-            F.col("_c.norm").alias("canonical"),
-            F.col("_c.type").alias("type"),
-            "n_mentions",
-            "n_surfaces",
+        return entity_table(
+            mention_entities.groupBy("entity_id", "type", "norm").agg(
+                F.count(F.lit(1)).alias("n_mentions")
+            )
         )
 
     entities, m3, r3 = stage("entities", build_entity_table, m2["fingerprint"])

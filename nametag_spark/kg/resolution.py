@@ -1,21 +1,29 @@
 """Entity resolution: canonicalization, minhash-LSH blocking, connected
-components (SURVEY.md §7.7 / north rule).
+components, entity assignment (SURVEY.md §7.7 / north rule).
 
 No reference analogue — this is the KG extension layered on the mention
-table. Everything here is declarative DataFrame work so Catalyst handles
-pushdown/pruning; the only iteration (connected components) uses the
-alternating large-star/small-star algorithm (Kiveris et al., "Connected
-Components in MapReduce and Beyond", SoCC'14 — public), with
-localCheckpoint() to truncate lineage between rounds.
+table. Each operator has one production implementation:
 
-Scale notes (100 TB posture):
-  - blocking is explode -> groupBy(band) -> within-bucket self-join; bucket
-    width is bounded by LSH parameters, and oversized buckets (degenerate
-    surfaces) are capped explicitly to keep the self-join quadratic blowup
-    bounded (no silent cap: the cap is a parameter and capped buckets can
-    be counted by the caller).
-  - minhash uses md5-derived 64-bit integer hashes (same function exists in
-    DuckDB, which makes the op oracle-checkable).
+  - blocking (lsh_similarity_edges): per-surface minhash signatures as
+    array transforms, band keys, ONE hash exchange on the bucket key, then
+    a partition-local Arrow/numpy bucket kernel (_make_bucket_pair_kernel)
+    that applies the oversized-bucket split/cap policy and the exact
+    distinct-shingle Jaccard verify. The cap is a parameter and oversized
+    buckets are split before anything is dropped.
+  - connected components (connected_components): three routes chosen by
+    observed size only — driver collect, driver streaming, or the
+    distributed alternating large-star/small-star rounds (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC'14 — public).
+  - assignment (assign_entity_ids) and the entity table (entity_table),
+    shared by resolve_entities, the graph builder and streaming
+    compaction.
+
+The declarative explode -> groupBy(band) -> within-bucket self-join
+formulation (_banded_bucket_frames, lsh_candidate_pairs, jaccard_filter)
+and minhash_signatures remain as parity references: tests and the DuckDB
+oracles compare the kernels against them. minhash uses md5-derived 64-bit
+integer hashes (the same function exists in DuckDB, which makes the op
+oracle-checkable).
 """
 
 from __future__ import annotations
@@ -33,17 +41,20 @@ import weakref
 
 _PERSISTED: list = []  # list[weakref.ref[DataFrame]]
 
-# Observability: connected_components records which execution tier the last
-# call took (driver-dict / driver-numpy / driver-streaming /
-# contraction->driver-numpy / distributed-star), the edge count, and the
-# memory-derived caps, so scale smokes and the bench artifact can show the
-# tier actually exercised without re-deriving it from thresholds.
+# Observability: connected_components records which route the last call
+# took (driver-numpy / driver-streaming / distributed-star), the edge count,
+# and the memory-derived caps, so scale smokes and the bench artifact can
+# show the route actually exercised without re-deriving it from thresholds.
 LAST_CC_INFO: dict = {}
 
-# edges per driver-side Arrow batch in the streaming CC tier (~64 MB of
+# edges per driver-side Arrow batch in the streaming CC route (~64 MB of
 # int64 pairs); module-level so tests can force multi-batch ingestion on
 # small graphs
 _STREAM_BATCH_EDGES = 4_000_000
+
+# alternating-star rounds before the distributed CC route gives up loudly;
+# a chain of n nodes needs about log2(n) + 1 (2,001 nodes: 12)
+_STAR_MAX_ROUNDS = 20
 
 
 def _register_persisted(df: DataFrame) -> None:
@@ -220,6 +231,17 @@ def minhash_signatures_kernel(
     return spread_small_input(df.select(key_col, text_col)).mapInPandas(kernel, schema=schema)
 
 
+def _band_columns(n_hashes: int, bands: int) -> list:
+    """One struct(band, sig) column per LSH band: sig is the md5 of the
+    band's n_hashes/bands signature values joined by '_'."""
+    rows = n_hashes // bands
+    cols = []
+    for b in range(bands):
+        parts = [F.col(f"mh{h}").cast("string") for h in range(b * rows, (b + 1) * rows)]
+        cols.append(F.struct(F.lit(b).alias("band"), F.md5(F.concat_ws("_", *parts)).alias("sig")))
+    return cols
+
+
 def _banded_bucket_frames(
     sig: DataFrame, carry: list, n_hashes: int, bands: int, max_bucket: int,
     block_cols=(),
@@ -271,13 +293,7 @@ def _banded_bucket_frames(
     (tests/test_ops.py::test_minhash_dup_pairs_matches_staged_reference),
     which drives candidate membership through BOTH and must stay green
     after any policy change."""
-    rows = n_hashes // bands
-    band_cols = []
-    for b in range(bands):
-        parts = [F.col(f"mh{h}").cast("string") for h in range(b * rows, (b + 1) * rows)]
-        band_cols.append(
-            F.struct(F.lit(b).alias("band"), F.md5(F.concat_ws("_", *parts)).alias("sig"))
-        )
+    band_cols = _band_columns(n_hashes, bands)
     half = n_hashes // 2
     sub1 = F.md5(F.concat_ws("_", *[F.col(f"mh{h}").cast("string") for h in range(half)]))
     sub2 = F.md5(F.concat_ws("_", *[F.col(f"mh{h}").cast("string") for h in range(half, n_hashes)]))
@@ -326,17 +342,6 @@ def _banded_bucket_frames(
     return [ok, split_ok]
 
 
-def _banded_ok_buckets(
-    sig: DataFrame, carry: list, n_hashes: int, bands: int, max_bucket: int,
-    block_cols=(),
-) -> DataFrame:
-    """Union view of _banded_bucket_frames for consumers that only need the
-    post-policy bucket MEMBERSHIP (histogram/diagnostics); pair-generating
-    callers self-join the frames separately to keep the co-partitioning."""
-    ok, split_ok = _banded_bucket_frames(sig, carry, n_hashes, bands, max_bucket, block_cols)
-    return ok.unionByName(split_ok)
-
-
 def lsh_candidate_pairs(
     df: DataFrame,
     text_col: str,
@@ -368,17 +373,17 @@ def lsh_candidate_pairs(
     return parts[0].unionByName(parts[1]).distinct()
 
 
-def _surface_signatures(
+def _signatures(
     df: DataFrame, text_col: str, key_col: str, n_hashes: int, k: int, block_col: str | None
-):
-    """(sig, carry) for the fused LSH path: one row per key with the shingle
-    array riding along plus mh0..mh{n-1} computed via array transforms (one
-    md5 per shingle, n affine permutations — no explode/shuffle)."""
-    sh = shingles(text_col, k)
-    carry0 = [F.col(key_col).alias("_k")]
+) -> DataFrame:
+    """One row per input row: _k (the key), _blk (the block column, if
+    any), _sh (the distinct shingle array) and mh0..mh{n-1}, computed as
+    array transforms — one md5 per shingle, n affine permutations, no
+    explode or shuffle. Same values as minhash_signatures."""
+    cols = [F.col(key_col).alias("_k")]
     if block_col is not None:
-        carry0.append(F.col(block_col).alias("_blk"))
-    src = df.select(*carry0, sh.alias("_sh")).withColumn(
+        cols.append(F.col(block_col).alias("_blk"))
+    src = df.select(*cols, shingles(text_col, k).alias("_sh")).withColumn(
         "_h", F.transform("_sh", lambda s: _hash28(s))
     )
     consts = minhash_affine_constants(n_hashes)
@@ -388,26 +393,8 @@ def _surface_signatures(
         ).alias(f"mh{i}")
         for i, (a, b) in enumerate(consts)
     ]
-    # per-SURFACE extras that make the per-PAIR verify cheap (the pair
-    # population is ~60-70x the surface population at production LSH
-    # parameters): _n = distinct-shingle count, so Jaccard uses
-    # |A∪B| = |A|+|B|−|A∩B| instead of materializing array_union per pair;
-    # _hd = distinct 28-bit shingle hashes for the int-array prefilter
-    # (sound only on collision-free surfaces — size(_hd) == _n on both
-    # sides, checked per pair in lsh_similarity_edges; colliding rows
-    # bypass straight to the exact string check)
-    names0 = ["_k"] + (["_blk"] if block_col is not None else [])
-    carry = ["_k", "_sh", "_hd", "_n"] + (["_blk"] if block_col is not None else [])
-    return (
-        src.select(
-            *names0,
-            "_sh",
-            F.array_distinct("_h").alias("_hd"),
-            F.size(F.array_distinct("_sh")).alias("_n"),
-            *mins,
-        ),
-        carry,
-    )
+    names = ["_k"] + (["_blk"] if block_col is not None else [])
+    return src.select(*names, "_sh", *mins)
 
 
 def _make_bucket_pair_kernel(
@@ -594,13 +581,7 @@ def _kernel_banded_pairs(
     mh0..mh{n_hashes-1} (prefix-stable affine family) — skip carrying the
     redundant _mh array through the exchange; the kernel slices the
     payload for the oversized-bucket split keys instead."""
-    rows = n_hashes // bands
-    band_cols = []
-    for b in range(bands):
-        parts = [F.col(f"mh{h}").cast("string") for h in range(b * rows, (b + 1) * rows)]
-        band_cols.append(
-            F.struct(F.lit(b).alias("band"), F.md5(F.concat_ws("_", *parts)).alias("sig"))
-        )
+    band_cols = _band_columns(n_hashes, bands)
     keep = ["_k"] + (["_blk"] if block else []) + ([payload_col] if payload_col else [])
     # rows with a NULL key, block, or payload could never produce a pair
     # under the join formulation (NULL never equality-matches and NULL
@@ -647,24 +628,25 @@ def lsh_bucket_histogram(
     block_col: str | None = None,
 ) -> dict:
     """Post-policy bucket-size histogram of the EXACT banding/split/cap
-    pipeline lsh_similarity_edges runs (same _banded_ok_buckets call), plus
+    policy lsh_similarity_edges runs (via the _banded_bucket_frames
+    reference, parity-pinned to the kernel), plus
     the in-bucket candidate-pair mass the downstream self-join will pay.
 
     Returns {"hist_log2": {bin: n_buckets}, "n_buckets", "max_bucket_size",
     "candidate_pairs"} where hist_log2 bins buckets by floor(log2(size)) and
     candidate_pairs = sum over buckets of size*(size-1)/2 — the quantity
     that must stay linear-ish in surfaces for the resolve phase to scale."""
-    sig, _carry = _surface_signatures(df, text_col, key_col, n_hashes, k, block_col)
-    # the histogram only counts bucket members — drop the per-surface verify
-    # payloads (shingle strings, hash arrays) so the persisted bucket table
-    # is keys-only (the fused edges path at the same scale holds ITS table
-    # in the same heap; carrying payloads twice OOMs an 8g local JVM)
+    # the histogram only counts bucket members — drop the shingle payload
+    # so the persisted bucket table is keys-only (the fused edges path at
+    # the same scale holds ITS table in the same heap; carrying payloads
+    # twice OOMs an 8g local JVM)
     carry = ["_k"] + (["_blk"] if block_col is not None else [])
-    sig = sig.select(*carry, *[f"mh{h}" for h in range(n_hashes)])
-    ok = _banded_ok_buckets(
+    sig = _signatures(df, text_col, key_col, n_hashes, k, block_col).drop("_sh")
+    ok, split_ok = _banded_bucket_frames(
         sig, carry, n_hashes, bands, max_bucket,
         block_cols=["_blk"] if block_col is not None else (),
     )
+    ok = ok.unionByName(split_ok)
     key = (["_blk"] if block_col is not None else []) + ["band", "sig"]
     sizes = ok.groupBy(*key).count().persist()
     _register_persisted(sizes)
@@ -739,22 +721,7 @@ def lsh_similarity_edges(
     trivially preserved (pinned by the same collision test). Edge SETS are
     identical; per-band duplicate occurrences (dedupe=False) are emitted
     per bucket exactly as the self-join did."""
-    sh = shingles(text_col, k)
-    cols = [F.col(key_col).alias("_k")]
-    if block_col is not None:
-        cols.append(F.col(block_col).alias("_blk"))
-    src = df.select(*cols, sh.alias("_sh")).withColumn(
-        "_h", F.transform("_sh", lambda s: _hash28(s))
-    )
-    consts = minhash_affine_constants(n_hashes)
-    mins = [
-        F.array_min(
-            F.transform("_h", lambda h: F.pmod(F.lit(a) * h + F.lit(b), F.lit(MINHASH_P)))
-        ).alias(f"mh{i}")
-        for i, (a, b) in enumerate(consts)
-    ]
-    names0 = ["_k"] + (["_blk"] if block_col is not None else [])
-    sig = src.select(*names0, "_sh", *mins)
+    sig = _signatures(df, text_col, key_col, n_hashes, k, block_col)
     out = _kernel_banded_pairs(
         sig, n_hashes, bands, max_bucket, block_col is not None, "_sh",
         mode="jaccard", threshold=threshold,
@@ -779,32 +746,6 @@ def jaccard_filter(
         .select("a", "b", "jaccard")
     )
     return out
-
-
-def _local_components(rows) -> list:
-    """Driver-side union-find for small edge sets."""
-    parent: dict = {}
-
-    def find(x):
-        r = x
-        while parent[r] != r:
-            r = parent[r]
-        while parent[x] != r:
-            parent[x], x = r, parent[x]
-        return r
-
-    for a, b in rows:
-        if a not in parent:
-            parent[a] = a
-        if b not in parent:
-            parent[b] = b
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            if ra < rb:
-                parent[rb] = ra
-            else:
-                parent[ra] = rb
-    return [(n, find(n)) for n in parent]
 
 
 def _uf_ingest(parent, si, di):
@@ -849,10 +790,10 @@ def _numpy_components(src, dst):
     (hook-and-compress, Shiloach-Vishkin shape): returns (nodes, labels)
     with labels[i] = minimum node id of nodes[i]'s component.
 
-    Exact same result as _local_components (component = min id), but
-    numpy-vectorized via _uf_ingest — ~2s for a 12M-edge graph where the
-    dict-based walk takes ~30s. Used by the driver finish of
-    connected_components; parity pinned by the tier-equality tests."""
+    Numpy-vectorized via _uf_ingest — ~2s for a 12M-edge graph where a
+    dict-based union-find walk takes ~30s. Used by the driver collect route
+    of connected_components; parity pinned against a dict union-find in
+    the tests."""
     import numpy as np
 
     nodes = np.unique(np.concatenate([src, dst]))
@@ -865,46 +806,6 @@ def _numpy_components(src, dst):
     return nodes, nodes[parent]
 
 
-def _forest_partition(batches):
-    """mapInPandas kernel: union-find over ONE partition's edges, emitting
-    the star forest (node -> partition-local min root) — same connectivity
-    as the partition's edge set with at most one output row per node."""
-    import pandas as pd
-
-    parent: dict = {}
-
-    def find(x):
-        r = x
-        while parent[r] != r:
-            r = parent[r]
-        while parent[x] != r:
-            parent[x], x = r, parent[x]
-        return r
-
-    for pdf in batches:
-        for a, b in zip(pdf["src"].to_numpy(), pdf["dst"].to_numpy()):
-            a = int(a)
-            b = int(b)
-            if a not in parent:
-                parent[a] = a
-            if b not in parent:
-                parent[b] = b
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                if ra < rb:
-                    parent[rb] = ra
-                else:
-                    parent[ra] = rb
-    out_n = []
-    out_r = []
-    for n in parent:
-        r = find(n)
-        if r != n:
-            out_n.append(n)
-            out_r.append(r)
-    yield pd.DataFrame({"src": pd.array(out_n, dtype="int64"), "dst": pd.array(out_r, dtype="int64")})
-
-
 def _parse_mem_bytes(s: str) -> int:
     """JVM memory string ('24g', '4096m', '512k', plain bytes) -> bytes."""
     s = s.strip().lower()
@@ -914,85 +815,95 @@ def _parse_mem_bytes(s: str) -> int:
     return int(s)
 
 
-def _driver_edge_cap(spark) -> int:
-    """Memory-aware cap for the driver-collect CC tier, in edges.
+# per driver cap: (session conf that overrides it, bytes of driver memory
+# budgeted per item, floor, ceiling)
+_DRIVER_CAPS = {
+    "edges": ("spark.nametag.cc.driverEdgeCap", 48, 2_000_000, 32_000_000),
+    "nodes": ("spark.nametag.cc.driverNodeCap", 64, 1_000_000, 256_000_000),
+}
 
-    The collect path is Arrow `toPandas` (two int64 columns): ~16 B/edge
-    in the final numpy arrays, but the Arrow batch + pandas DataFrame +
-    transient copies peak near ~48 B/edge on the PYTHON driver process,
-    with a comparable transient on the JVM side. Budget 1/8 of
-    `spark.driver.memory` at 48 B/edge so the tier choice ports to real
-    cluster drivers instead of assuming this sandbox's 128 GiB: a 4 GiB
-    driver caps at ~11M edges, the floor keeps small drivers on the (much
-    cheaper than star rounds) vectorized tier up to 2M edges, and the
-    32M ceiling is the largest scale the tier has been measured at.
-    Override per session with `spark.nametag.cc.driverEdgeCap` (edges) or
-    per call with an explicit `contracted_driver_threshold`.
 
-    Prerequisite note: without `spark.sql.execution.arrow.pyspark.enabled`
-    the collect degrades to row-based toPandas (far larger driver
-    footprint); the budget's 3x headroom covers that for the floor-sized
-    graphs, but sessions built by this package enable Arrow."""
-    conf_cap = spark.conf.get("spark.nametag.cc.driverEdgeCap", None)
+def _driver_cap(spark, what: str) -> int:
+    """Memory-aware cap for a driver CC route: "edges" for the collect
+    route, "nodes" for the streaming route. The session conf in
+    _DRIVER_CAPS overrides it; otherwise the cap budgets 1/8 of
+    `spark.driver.memory`, clamped to [floor, ceiling].
+
+    edges, 48 B/edge: the collect is Arrow `toPandas` (two int64 columns),
+    ~16 B/edge in the final numpy arrays, but the Arrow batch + pandas
+    DataFrame + transient copies peak near ~48 B/edge on the PYTHON driver
+    process, with a comparable transient on the JVM side. A 4 GiB driver
+    caps at ~11M edges; the 2M floor keeps small drivers on the (much
+    cheaper than star rounds) vectorized route, and the 32M ceiling is the
+    largest scale the route has been measured at. Without
+    `spark.sql.execution.arrow.pyspark.enabled` the collect degrades to
+    row-based toPandas; the 3x headroom covers that for floor-sized
+    graphs, and sessions built by this package enable Arrow.
+
+    nodes, 64 B/node: the streaming route keeps only the sorted node-id
+    array + the label array (16 B/node) across batches; 4x headroom covers
+    the searchsorted / unique transients. Per-batch buffers are bounded by
+    _STREAM_BATCH_EDGES, not by the graph."""
+    conf, per_item, floor, ceiling = _DRIVER_CAPS[what]
+    conf_cap = spark.conf.get(conf, None)
     if conf_cap:
         return int(conf_cap)
     try:
         mem = _parse_mem_bytes(spark.conf.get("spark.driver.memory", "2g"))
     except (ValueError, TypeError):
         mem = 2 << 30
-    return max(2_000_000, min(32_000_000, mem // 8 // 48))
+    return max(floor, min(ceiling, mem // 8 // per_item))
 
 
-def _driver_node_cap(spark) -> int:
-    """Node cap for the STREAMING driver tier (edges exceed the collect
-    cap but the node set fits): persistent driver state is just the sorted
-    node-id array + the label array (16 B/node); per-batch buffers are
-    bounded by the batch size, not the graph. Budget 1/8 of
-    `spark.driver.memory` at 64 B/node (4x headroom for searchsorted /
-    unique transients). Override with `spark.nametag.cc.driverNodeCap`."""
-    conf_cap = spark.conf.get("spark.nametag.cc.driverNodeCap", None)
-    if conf_cap is not None and conf_cap != "":
-        return int(conf_cap)
-    try:
-        mem = _parse_mem_bytes(spark.conf.get("spark.driver.memory", "2g"))
-    except (ValueError, TypeError):
-        mem = 2 << 30
-    return max(1_000_000, min(256_000_000, mem // 8 // 64))
+def _components_frame(spark, nodes, labels) -> DataFrame:
+    """(node, component) frame from the driver routes' numpy arrays.
+
+    The table's size is known exactly, so under conf
+    `spark.nametag.cc.broadcastNodeCap` (rows) it is hinted broadcastable:
+    the surface-assignment join downstream then plans a BroadcastHashJoin
+    instead of shuffling both sides (a driver-local pandas frame plans as
+    a scan with UNKNOWN stats, so the auto-broadcast threshold never fires
+    on its own). Values are unchanged — it is a planner hint."""
+    import pandas as pd
+
+    if len(nodes) == 0:
+        return spark.createDataFrame([], "node long, component long")
+    out = spark.createDataFrame(pd.DataFrame({"node": nodes, "component": labels}))
+    cap = int(spark.conf.get("spark.nametag.cc.broadcastNodeCap", "8000000"))
+    return F.broadcast(out) if len(nodes) <= cap else out
 
 
-def connected_components(
-    edges: DataFrame,
-    max_iterations: int = 20,
-    driver_threshold: int = 200_000,
-    contracted_driver_threshold: int | None = None,
-) -> DataFrame:
-    """Alternating large-star/small-star connected components.
+def connected_components(edges: DataFrame) -> DataFrame:
+    """Connected components of an undirected edge list.
 
     edges: (src:long, dst:long). Returns (node:long, component:long) where
     component is the minimum node id of the component (including a
     (component, component) self-row). Isolated nodes that never appear in
     edges must be handled by the caller (left join + coalesce to self).
 
-    Hybrid execution, four tiers: similarity graphs are usually tiny
-    relative to the mention table (edges live on distinct-surface pairs),
-    so when the edge count fits comfortably on the driver we run union-find
-    locally instead of paying ~8 shuffle rounds per star iteration.
-      1. driver-dict: <= driver_threshold edges, plain dict union-find.
-      2. driver-numpy: up to contracted_driver_threshold edges (default
-         derived from spark.driver.memory — _driver_edge_cap — so the
-         collect tier never outgrows the actual driver), the raw pair
-         list Arrow-collects and the VECTORIZED min-label union-find
-         (_numpy_components, hook-and-compress) finishes in O(log n)
-         numpy rounds — 12M edges in ~2s.
-      3. driver-streaming: edges exceed the collect cap but the NODE set
-         fits (_driver_node_cap): edges spill to parquet once and stream
-         through a fixed driver label array in bounded batches — driver
+    Similarity graphs are usually tiny relative to the mention table
+    (edges live on distinct-surface pairs), so union-find runs on the
+    driver whenever it fits. The route depends only on the observed size
+    of the graph and the session confs of _driver_cap:
+      1. driver collect (LAST_CC_INFO tier "driver-numpy"): edges <=
+         `spark.nametag.cc.driverEdgeCap` (default derived from
+         spark.driver.memory). The pair list Arrow-collects and the
+         vectorized min-label union-find (_numpy_components,
+         hook-and-compress) finishes in O(log n) numpy rounds — 12M edges
+         in ~2s.
+      2. driver streaming ("driver-streaming"): too many edges to collect,
+         but nodes <= `spark.nametag.cc.driverNodeCap`. Edges spill to
+         parquet once (`spark.nametag.cc.spillDir`, which must be shared
+         between executors and the driver) and stream through a fixed
+         driver label array in batches of _STREAM_BATCH_EDGES: driver
          memory O(nodes + batch), not O(edges).
-      4. distributed: endpoint-keyed contraction passes try to shrink the
-         graph under the collect threshold, falling back to the
-         fully-distributed alternating-star algorithm when they can't.
+      3. distributed star ("distributed-star"): otherwise, alternating
+         large-star/small-star rounds (Kiveris et al., SoCC'14) with a
+         lazy localCheckpoint per round, until the edge set's checksum
+         repeats; RuntimeError after _STAR_MAX_ROUNDS rounds without
+         convergence.
     The final (node -> min component id) mapping is independent of
-    partitioning and of the tier taken."""
+    partitioning and of the route taken."""
     e = edges.select(F.col("src").cast("long"), F.col("dst").cast("long")).where(F.col("src") != F.col("dst"))
     e = e.select(
         F.greatest("src", "dst").alias("src"), F.least("src", "dst").alias("dst")
@@ -1001,54 +912,18 @@ def connected_components(
     e0 = e = e.persist()
     n_edges = e.count()
     spark = edges.sparkSession
-    if contracted_driver_threshold is None:
-        contracted_driver_threshold = _driver_edge_cap(spark)
-    LAST_CC_INFO.update(
-        {"n_edges": n_edges, "edge_cap": contracted_driver_threshold, "tier": None}
-    )
-    def _maybe_broadcast(df, n_rows):
-        """Driver-built component tables are exact-size-known; hint them
-        broadcastable so the surface-assignment join downstream plans a
-        BroadcastHashJoin instead of shuffling both sides (a driver-local
-        list/pandas frame plans as an RDD scan with UNKNOWN stats, so the
-        auto-broadcast threshold never fires on its own). Values are
-        unchanged — it is a planner hint. Cap keeps huge component tables
-        off the executors' memory (conf `spark.nametag.cc.broadcastNodeCap`,
-        rows)."""
-        cap = int(spark.conf.get("spark.nametag.cc.broadcastNodeCap", "8000000"))
-        return F.broadcast(df) if n_rows <= cap else df
+    edge_cap = _driver_cap(spark, "edges")
+    LAST_CC_INFO.update({"n_edges": n_edges, "edge_cap": edge_cap, "tier": None})
 
-    def _driver_finish(edge_df, cached, tier_label):
-        """Arrow-collect the (src, dst) pairs and run the vectorized
-        min-label union-find — ~16 bytes/edge on the driver, O(log n)
-        numpy rounds (2s for 12M edges vs ~30s for the dict walk). The
-        result is the same (component = min node id) for every tier, so
-        the <=driver_threshold band routes through here too (the label
-        keeps naming the ROUTING band, not the kernel)."""
-        import pandas as pd
-
-        LAST_CC_INFO["tier"] = tier_label
-        pdf = edge_df.toPandas()
-        cached.unpersist()
-        nodes, labels = _numpy_components(pdf["src"].to_numpy(), pdf["dst"].to_numpy())
-        if len(nodes) == 0:
-            return spark.createDataFrame([], "node long, component long")
-        return _maybe_broadcast(
-            spark.createDataFrame(pd.DataFrame({"node": nodes, "component": labels})),
-            len(nodes),
+    if n_edges <= edge_cap:
+        LAST_CC_INFO["tier"] = "driver-numpy"
+        pdf = e.toPandas()
+        e0.unpersist()
+        return _components_frame(
+            spark, *_numpy_components(pdf["src"].to_numpy(), pdf["dst"].to_numpy())
         )
 
-    if n_edges <= driver_threshold:
-        return _driver_finish(e, e0, "driver-dict")
-
-    if n_edges <= contracted_driver_threshold:
-        # the raw edge list already fits the driver: no contraction pass
-        # needed (it exists to SHRINK a too-big graph, and on clique-shaped
-        # similarity graphs it barely does: every dst-keyed star contracts
-        # to itself — measured 12.34M -> 11.98M edges)
-        return _driver_finish(e, e0, "driver-numpy")
-
-    # STREAMING driver tier: the edge list is too big to collect, but
+    # STREAMING driver route: the edge list is too big to collect, but
     # union-find only needs per-NODE state — and similarity graphs have far
     # fewer nodes (distinct surfaces) than edges. The edges spill to
     # parquet once (executors write in parallel; on a cluster this is the
@@ -1057,11 +932,10 @@ def connected_components(
     # O(nodes + batch), not O(edges). Incremental ingest is exact —
     # union-find is order-insensitive and each batch is hooked against
     # fully-compressed root labels (_uf_ingest).
-    node_cap = _driver_node_cap(spark)
     nd = e.select("src").union(e.select("dst")).distinct().persist()
     n_nodes = nd.count()
     LAST_CC_INFO["n_nodes"] = n_nodes
-    if n_nodes <= node_cap:
+    if n_nodes <= _driver_cap(spark, "nodes"):
         LAST_CC_INFO["tier"] = "driver-streaming"
         import os
         import shutil
@@ -1069,7 +943,6 @@ def connected_components(
         import uuid
 
         import numpy as np
-        import pandas as pd
         import pyarrow.dataset as pads
 
         nodes = np.sort(nd.toPandas().iloc[:, 0].to_numpy())
@@ -1116,48 +989,12 @@ def connected_components(
                 )
         finally:
             shutil.rmtree(tmp, ignore_errors=True)
-        return _maybe_broadcast(
-            spark.createDataFrame(pd.DataFrame({"node": nodes, "component": nodes[parent]})),
-            len(nodes),
-        )
+        return _components_frame(spark, nodes, nodes[parent])
     nd.unpersist()
 
-    # contraction tier before the distributed star rounds: alternating
-    # endpoint-keyed partition-local union-find forests. Keying co-locates
-    # each node's star (an arbitrary shuffle placement gives partitions
-    # with almost no node overlap and therefore no contraction at all);
-    # passes repeat only while the graph is still over the driver
-    # threshold AND shrinking — each pass preserves connectivity (a local
-    # forest spans exactly its partition's connectivity), so any pass
-    # count yields the same components. Output rows keep src > dst (the
-    # local root is the partition minimum).
-    contracted = e
-    n_contracted = n_edges
-    prev_cached = e0
-    for key in ("dst", "src", "dst", "src"):
-        nxt = (
-            contracted.repartition(F.col(key))
-            .mapInPandas(_forest_partition, schema="src long, dst long")
-            .persist()
-        )
-        n_nxt = nxt.count()
-        prev_cached.unpersist()
-        prev_cached = nxt
-        shrunk = n_nxt < 0.7 * n_contracted
-        contracted, n_contracted = nxt, n_nxt
-        if n_contracted <= contracted_driver_threshold or not shrunk:
-            break
-    e0 = e = contracted
-    if n_contracted <= contracted_driver_threshold:
-        LAST_CC_INFO["n_contracted"] = n_contracted
-        return _driver_finish(contracted, e0, "contraction->driver-numpy")
-
     LAST_CC_INFO["tier"] = "distributed-star"
-    LAST_CC_INFO["n_contracted"] = n_contracted
-    star_rounds = 0
     prev_checksum = None
-    for _ in range(max_iterations):
-        star_rounds += 1
+    for star_rounds in range(1, _STAR_MAX_ROUNDS + 1):
         # large-star: for each u over undirected neighborhood, connect every
         # strictly-larger neighbor to the min of N(u) + {u}
         und = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
@@ -1210,6 +1047,13 @@ def connected_components(
         if cur == prev_checksum:
             break
         prev_checksum = cur
+    else:
+        # the labels of an unconverged round are wrong for every node not
+        # yet hooked to its component minimum: fail instead of returning them
+        raise RuntimeError(
+            f"connected_components: the distributed star rounds did not converge "
+            f"within {_STAR_MAX_ROUNDS} rounds on {n_edges} edges"
+        )
 
     LAST_CC_INFO["star_rounds"] = star_rounds
     out = e.select(F.col("src").alias("node"), F.col("dst").alias("component"))
@@ -1217,6 +1061,70 @@ def connected_components(
     return out.union(
         out.select(F.col("component").alias("node"), F.col("component"))
     ).distinct()
+
+
+def assign_entity_ids(
+    surfaces: DataFrame,
+    lsh_hashes: int = 12,
+    lsh_bands: int = 4,
+    shingle_k: int = 3,
+    jaccard_threshold: float = 0.6,
+    max_bucket: int = 200,
+) -> DataFrame:
+    """Distinct (type, norm, ...) surfaces -> the same rows plus `sid` (the
+    surface key) and `entity_id` (the minimum sid of the surface's
+    similarity component; a surface with no similar neighbor keeps its own
+    sid).
+
+    Candidate pairs are blocked on the entity type: the type is a hard
+    BLOCKING column on the bucket key (not a prefix baked into the
+    shingled text, which poisons band minima at scale — see
+    lsh_similarity_edges); Jaccard verifies over the norm alone.
+    dedupe=False: connected_components normalizes + distincts its input
+    anyway, so the edge list's own distinct would be a second full
+    exchange + aggregate over the same pairs for identical components."""
+    # stable surface key: deterministic hash of (type, norm)
+    surfaces = surfaces.withColumn("sid", _hash64(F.concat_ws("\t", "type", "norm"), 0))
+    edges = lsh_similarity_edges(
+        surfaces.select("sid", "type", "norm"),
+        "norm",
+        "sid",
+        n_hashes=lsh_hashes,
+        bands=lsh_bands,
+        k=shingle_k,
+        threshold=jaccard_threshold,
+        max_bucket=max_bucket,
+        block_col="type",
+        dedupe=False,
+    )
+    comp = connected_components(edges)
+    return surfaces.join(comp, surfaces["sid"] == comp["node"], "left").select(
+        *[surfaces[c] for c in surfaces.columns],
+        F.coalesce(comp["component"], surfaces["sid"]).alias("entity_id"),
+    )
+
+
+def entity_table(surfaces: DataFrame) -> DataFrame:
+    """(entity_id, type, norm, n_mentions) surface rows -> one row per
+    entity: (entity_id, canonical, type, n_mentions, n_surfaces).
+
+    canonical surface = most frequent norm in the entity (ties: lexical
+    ascending). One min_by aggregation — no window pass: min over the
+    struct (-n_mentions, norm) picks highest frequency then lowest norm."""
+    return surfaces.groupBy("entity_id").agg(
+        F.min_by(
+            F.struct(F.col("norm"), F.col("type")),
+            F.struct((-F.col("n_mentions")).alias("_negn"), F.col("norm").alias("_n")),
+        ).alias("_c"),
+        F.sum("n_mentions").alias("n_mentions"),
+        F.count(F.lit(1)).alias("n_surfaces"),
+    ).select(
+        "entity_id",
+        F.col("_c.norm").alias("canonical"),
+        F.col("_c.type").alias("type"),
+        "n_mentions",
+        "n_surfaces",
+    )
 
 
 def resolve_entities(
@@ -1235,7 +1143,7 @@ def resolve_entities(
 
     Returns:
       mention_entities: mentions + (norm, entity_id)
-      entities: (entity_id, type, canonical, n_mentions, n_surfaces)
+      entities: (entity_id, canonical, type, n_mentions, n_surfaces)
     """
     # cut the (expensive) upstream NER lineage once: every branch below —
     # surface aggregation, LSH, similarity join, final assignment join —
@@ -1248,36 +1156,14 @@ def resolve_entities(
         m.groupBy("type", "norm").agg(F.count(F.lit(1)).alias("n_mentions"))
     ).persist()
     _register_persisted(surfaces)
-    # stable surface key: deterministic hash of (type, norm)
-    surfaces = surfaces.withColumn("sid", _hash64(F.concat_ws("\t", "type", "norm"), 0))
 
-    # candidate pairs within the same entity type only: the type is a hard
-    # BLOCKING column on the bucket key (not a prefix baked into the
-    # shingled text, which poisons band minima at scale — see
-    # lsh_similarity_edges); Jaccard verifies over the norm alone
-    # dedupe=False: connected_components normalizes + distincts its input
-    # anyway, so the edge list's own distinct would be a second full
-    # exchange + aggregate over the same pairs for identical components
-    edges = lsh_similarity_edges(
-        surfaces.select("sid", "type", "norm"),
-        "norm",
-        "sid",
-        n_hashes=lsh_hashes,
-        bands=lsh_bands,
-        k=shingle_k,
-        threshold=jaccard_threshold,
+    assign = assign_entity_ids(
+        surfaces,
+        lsh_hashes=lsh_hashes,
+        lsh_bands=lsh_bands,
+        shingle_k=shingle_k,
+        jaccard_threshold=jaccard_threshold,
         max_bucket=max_bucket,
-        block_col="type",
-        dedupe=False,
-    )
-
-    comp = connected_components(edges)
-    assign = surfaces.join(comp, surfaces["sid"] == comp["node"], "left").select(
-        surfaces["type"],
-        surfaces["norm"],
-        surfaces["n_mentions"],
-        surfaces["sid"],
-        F.coalesce(comp["component"], surfaces["sid"]).alias("entity_id"),
     )
     # connected_components already ran its jobs, so the persisted surface
     # table is materialized and this count is a cache read. Under the cap,
@@ -1293,23 +1179,6 @@ def resolve_entities(
     if surfaces.count() <= bcast_cap:
         assign_small = F.broadcast(assign_small)
 
-    # canonical surface = most frequent norm in the component (ties: lexical
-    # ascending). One min_by aggregation — no window pass: min over the
-    # struct (-n_mentions, norm) picks highest frequency then lowest norm.
-    entities = assign.groupBy("entity_id").agg(
-        F.min_by(
-            F.struct(F.col("norm"), F.col("type")),
-            F.struct((-F.col("n_mentions")).alias("_negn"), F.col("norm").alias("_n")),
-        ).alias("_c"),
-        F.sum("n_mentions").alias("n_mentions"),
-        F.count(F.lit(1)).alias("n_surfaces"),
-    ).select(
-        "entity_id",
-        F.col("_c.norm").alias("canonical"),
-        F.col("_c.type").alias("type"),
-        "n_mentions",
-        "n_surfaces",
-    )
-
+    entities = entity_table(assign)
     mention_entities = m.join(assign_small, ["type", "norm"], "left")
     return mention_entities, entities

@@ -58,9 +58,9 @@ def minhash_dup_pairs(
     explode->groupBy reference, parity-pinned); banding, the cap/split
     policy, and the estimate prefilter then run partition-locally in the
     bucket kernel after one hash exchange (_kernel_banded_pairs). The
-    exact-Jaccard verify computes shingle ARRAYS only for docs that
-    appear in a candidate pair (semi-join prune — the pre-r8
-    jaccard_filter pass built the arrays for the whole corpus). Outputs
+    exact-Jaccard verify (jaccard_filter) computes shingle ARRAYS only for
+    docs that appear in a candidate pair (semi-join prune — the pre-r8
+    verify built the arrays for the whole corpus). Outputs
     are identical (same hash family, same margin, same banding policy,
     same exact-Jaccard verify).
 
@@ -74,8 +74,8 @@ def minhash_dup_pairs(
     from ..kg.resolution import (
         _kernel_banded_pairs,
         _register_persisted,
+        jaccard_filter,
         minhash_signatures_kernel,
-        shingles,
     )
 
     use_est = bands < n_hashes
@@ -123,21 +123,10 @@ def minhash_dup_pairs(
 
     # exact verify over shingle ARRAYS built only for candidate docs: the
     # semi-join prunes the corpus BEFORE the (interpreted, per-character)
-    # shingle transform runs, where jaccard_filter computed arrays for
-    # every doc in the table
+    # shingle transform runs
     ids = pairs.select(F.explode(F.array("a", "b")).alias("_id")).distinct()
-    sh = base.join(ids, "_id", "left_semi").select(
-        "_id", shingles("_norm", shingle_k).alias("_sh")
-    )
-    return (
-        pairs.join(sh.withColumnRenamed("_id", "a").withColumnRenamed("_sh", "sh_a"), "a")
-        .join(sh.withColumnRenamed("_id", "b").withColumnRenamed("_sh", "sh_b"), "b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("sh_a", "sh_b")) / F.size(F.array_union("sh_a", "sh_b")),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("a", "b", "jaccard")
+    return jaccard_filter(
+        pairs, base.join(ids, "_id", "left_semi"), "_norm", "_id", threshold, shingle_k
     )
 
 

@@ -155,7 +155,7 @@ def compact_triples(
     ids to both pair sides, and run the fused triple aggregation. Returns
     the triples DataFrame; callers persist it with graph_io.write_stage for
     lineage + pred partitioning."""
-    from ..kg.resolution import _hash64, connected_components, lsh_similarity_edges
+    from ..kg.resolution import assign_entity_ids
     from ..kg.triples import aggregate_triples
 
     ev = spark.read.parquet(f"{out_dir}/evidence")
@@ -164,29 +164,18 @@ def compact_triples(
         spark.read.parquet(f"{out_dir}/surfaces")
         .groupBy("type", "norm")
         .agg(F.sum("n_mentions").alias("n_mentions"))
-        .withColumn("sid", _hash64(F.concat_ws("\t", "type", "norm"), 0))
         .persist()
     )
-    # same blocking/verify parameters as resolve_entities' defaults, so the
-    # compacted clustering equals the batch pipeline's (type as a hard
-    # blocking column, Jaccard over the norm alone)
-    comp = connected_components(
-        lsh_similarity_edges(
-            surfaces.select("sid", "type", "norm"),
-            "norm",
-            "sid",
-            n_hashes=lsh_hashes,
-            bands=lsh_bands,
-            k=shingle_k,
-            threshold=jaccard_threshold,
-            max_bucket=max_bucket,
-            block_col="type",
-        )
-    )
-    assign = surfaces.join(comp, surfaces["sid"] == comp["node"], "left").select(
-        surfaces["type"],
-        surfaces["norm"],
-        F.coalesce(comp["component"], surfaces["sid"]).alias("entity_id"),
+    # the batch pipeline's assignment with the same blocking/verify
+    # parameters as resolve_entities' defaults, so the compacted clustering
+    # equals the batch pipeline's
+    assign = assign_entity_ids(
+        surfaces,
+        lsh_hashes=lsh_hashes,
+        lsh_bands=lsh_bands,
+        shingle_k=shingle_k,
+        jaccard_threshold=jaccard_threshold,
+        max_bucket=max_bucket,
     )
 
     subj_assign = assign.select(

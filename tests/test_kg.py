@@ -1,6 +1,8 @@
 """KG extension tests: connected components, LSH blocking, resolution,
 triples, checkpoint/resume."""
 
+import contextlib
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -32,17 +34,45 @@ def _uf_components(edges, nodes):
     return {n: find(n) for n in nodes}
 
 
-import pytest as _pytest
+# per connected_components route: its LAST_CC_INFO tier label and the
+# session confs that force it (the route depends on nothing else)
+_CC_ROUTES = {
+    "numpy": ("driver-numpy", {}),
+    "streaming": ("driver-streaming", {"spark.nametag.cc.driverEdgeCap": "0"}),
+    "star": (
+        "distributed-star",
+        {"spark.nametag.cc.driverEdgeCap": "0", "spark.nametag.cc.driverNodeCap": "0"},
+    ),
+}
 
 
-@_pytest.mark.parametrize("tier", ["dict", "numpy", "streaming", "star"])
-def test_connected_components_matches_union_find(spark, tier):
-    """All four hybrid tiers must agree exactly with reference union-find
-    (the thresholds only pick the execution strategy, never the result),
-    and LAST_CC_INFO must report the tier actually taken."""
-    import random
+@contextlib.contextmanager
+def _cc_route(spark, route):
+    confs = _CC_ROUTES[route][1]
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k in confs:
+            spark.conf.unset(k)
 
+
+def _cc_labels(spark, df, route):
     from nametag_spark.kg.resolution import LAST_CC_INFO
+
+    with _cc_route(spark, route):
+        got = {r["node"]: r["component"] for r in connected_components(df).collect()}
+    assert LAST_CC_INFO["tier"] == _CC_ROUTES[route][0]
+    return got
+
+
+@pytest.mark.parametrize("tier", ["numpy", "streaming", "star"])
+def test_connected_components_matches_union_find(spark, tier):
+    """All three routes must agree exactly with reference union-find (the
+    caps only pick the execution strategy, never the result), and
+    LAST_CC_INFO must report the route actually taken."""
+    import random
 
     rng = random.Random(4)
     # 10k edges over 3k nodes: dense enough for multi-round star convergence
@@ -51,30 +81,8 @@ def test_connected_components_matches_union_find(spark, tier):
     edges = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(10_000)]
     edges = [(a, b) for a, b in edges if a != b]
 
-    kw = {
-        "dict": dict(driver_threshold=2_000_000),
-        "numpy": dict(driver_threshold=0, contracted_driver_threshold=8_000_000),
-        "streaming": dict(driver_threshold=0, contracted_driver_threshold=0),
-        "star": dict(driver_threshold=0, contracted_driver_threshold=0),
-    }[tier]
-    expect_tier = {
-        "dict": "driver-dict",
-        "numpy": "driver-numpy",
-        "streaming": "driver-streaming",
-        "star": "distributed-star",
-    }[tier]
     df = spark.createDataFrame(edges, ["src", "dst"]).repartition(8)
-    try:
-        if tier == "star":
-            # node set fits any real cap; force past the streaming tier
-            spark.conf.set("spark.nametag.cc.driverNodeCap", "0")
-        got = {
-            r["node"]: r["component"]
-            for r in connected_components(df, **kw).collect()
-        }
-    finally:
-        spark.conf.unset("spark.nametag.cc.driverNodeCap")
-    assert LAST_CC_INFO["tier"] == expect_tier
+    got = _cc_labels(spark, df, tier)
 
     expect = _uf_components(edges, set([a for a, _ in edges] + [b for _, b in edges]))
     # engine returns only nodes appearing in edges; min-id representative
@@ -88,14 +96,14 @@ def test_connected_components_matches_union_find(spark, tier):
 
 def test_numpy_components_matches_dict_union_find():
     """_numpy_components (vectorized hook-and-compress) must agree exactly
-    with the dict-based _local_components on adversarial shapes: random
+    with the dict union-find _uf_components on adversarial shapes: random
     multigraphs, cliques, and a long chain (worst case for label
     propagation — converges via pointer doubling, not via hooking)."""
     import random
 
     import numpy as np
 
-    from nametag_spark.kg.resolution import _local_components, _numpy_components
+    from nametag_spark.kg.resolution import _numpy_components
 
     cases = []
     rng = random.Random(7)
@@ -109,70 +117,94 @@ def test_numpy_components_matches_dict_union_find():
         src = np.array([a for a, _ in edges], dtype=np.int64)
         dst = np.array([b for _, b in edges], dtype=np.int64)
         got_nodes, got_labels = _numpy_components(src, dst)
-        expect = dict(_local_components(edges))
+        expect = _uf_components(edges, {n for e in edges for n in e})
         assert len(got_nodes) == len(expect)
         for n, c in zip(got_nodes.tolist(), got_labels.tolist()):
             assert expect[n] == c, f"node {n}: got {c}, expect {expect[n]}"
 
 
-@_pytest.mark.parametrize("tier", ["numpy", "streaming", "star"])
+@pytest.mark.parametrize("tier", ["numpy", "streaming", "star"])
 def test_connected_components_chain_graph(spark, tier):
-    """Path graph = the adversarial case for label propagation AND for
-    keyed partition-local contraction: one component spans EVERY partition
-    (and every streaming batch), so no single local pass can finish it —
-    pointer doubling (numpy/streaming) and the alternating-star rounds
-    must still converge to the one global minimum for every node."""
+    """Path graph = the adversarial case for label propagation: one
+    component spans EVERY partition (and every streaming batch), so no
+    single local pass can finish it — pointer doubling (numpy/streaming)
+    and the alternating-star rounds must still converge to the one global
+    minimum for every node."""
     n = 20_001
     edges = [(i, i + 1) for i in range(1, n)]
     df = spark.createDataFrame(edges, ["src", "dst"]).repartition(16)
-    kw = {
-        "numpy": dict(contracted_driver_threshold=8_000_000),
-        "streaming": dict(contracted_driver_threshold=0),
-        "star": dict(contracted_driver_threshold=0),
-    }[tier]
-    try:
-        if tier == "star":
-            spark.conf.set("spark.nametag.cc.driverNodeCap", "0")
-        got = {
-            r["node"]: r["component"]
-            for r in connected_components(df, driver_threshold=0, **kw).collect()
-        }
-    finally:
-        spark.conf.unset("spark.nametag.cc.driverNodeCap")
+    got = _cc_labels(spark, df, tier)
     assert set(got.values()) == {1}
     assert len(got) == n
 
 
+def test_star_route_fails_loudly_when_rounds_run_out(spark, monkeypatch):
+    """A 2,001-node chain needs 12 star rounds. With 2 allowed the rounds
+    stop before every node is hooked to the minimum, and the route must
+    raise instead of returning wrong labels."""
+    import nametag_spark.kg.resolution as R
+
+    monkeypatch.setattr(R, "_STAR_MAX_ROUNDS", 2)
+    edges = [(i, i + 1) for i in range(1, 2_001)]
+    df = spark.createDataFrame(edges, ["src", "dst"]).repartition(4)
+    with _cc_route(spark, "star"), pytest.raises(
+        RuntimeError, match="did not converge within 2 rounds on 2000 edges"
+    ):
+        R.connected_components(df)
+
+
+def test_cc_collect_route_job_count(spark):
+    """Job-count guard for the driver collect route on a small graph:
+    the cached edge count, the Arrow collect, and the caller's count of the
+    broadcast component table — 8 jobs, as before the route cleanup."""
+    import random
+
+    rng = random.Random(11)
+    nodes = list(range(1, 400))
+    edges = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(1_500)]
+    edges = [(a, b) for a, b in edges if a != b]
+    df = spark.createDataFrame(edges, ["src", "dst"]).repartition(8)
+    sc = spark.sparkContext
+    sc.setJobGroup("cc_collect_route_jobs", "cc_collect_route_jobs")
+    try:
+        n = connected_components(df).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert n == 399
+    assert len(sc.statusTracker().getJobIdsForGroup("cc_collect_route_jobs")) == 8
+
+
 def test_cc_driver_tier_is_memory_aware(spark):
-    """The collect-tier edge cap derives from spark.driver.memory (with a
+    """The collect-route edge cap derives from spark.driver.memory (with a
     session-conf override) instead of being an absolute constant, and a
-    low cap routes the SAME graph through the distributed tier with an
+    low cap routes the SAME graph past the collect route with an
     identical result."""
-    from nametag_spark.kg.resolution import _driver_edge_cap, _parse_mem_bytes
+    from nametag_spark.kg.resolution import LAST_CC_INFO, _driver_cap, _parse_mem_bytes
 
     assert _parse_mem_bytes("24g") == 24 << 30
     assert _parse_mem_bytes("4096m") == 4096 << 20
     assert _parse_mem_bytes("1073741824") == 1 << 30
-    # derived cap: 1/8 of driver mem at 48 B/edge, clamped [2M, 32M]
-    assert _driver_edge_cap(spark) >= 2_000_000
+    # derived caps: 1/8 of driver mem at 48 B/edge, clamped [2M, 32M], and
+    # at 64 B/node, clamped [1M, 256M]
+    assert _driver_cap(spark, "edges") >= 2_000_000
+    assert _driver_cap(spark, "nodes") >= 1_000_000
     try:
         spark.conf.set("spark.nametag.cc.driverEdgeCap", "7")
-        assert _driver_edge_cap(spark) == 7
+        spark.conf.set("spark.nametag.cc.driverNodeCap", "9")
+        assert _driver_cap(spark, "edges") == 7
+        assert _driver_cap(spark, "nodes") == 9
+        spark.conf.unset("spark.nametag.cc.driverNodeCap")
         import random
-
-        from nametag_spark.kg.resolution import LAST_CC_INFO
 
         rng = random.Random(11)
         nodes = list(range(1, 400))
         edges = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(1_500)]
         edges = [(a, b) for a, b in edges if a != b]
         df = spark.createDataFrame(edges, ["src", "dst"]).repartition(8)
-        # cap 7 << 1500 edges: must route past the collect tier (the node
-        # set still fits, so the streaming tier takes it), same answer
-        got = {
-            r["node"]: r["component"]
-            for r in connected_components(df, driver_threshold=0).collect()
-        }
+        # cap 7 << 1500 edges: must route past the collect route (the node
+        # set still fits, so the streaming route takes it), same answer
+        got = {r["node"]: r["component"] for r in connected_components(df).collect()}
         assert LAST_CC_INFO["tier"] == "driver-streaming"
         expect = _uf_components(
             edges, set([a for a, _ in edges] + [b for _, b in edges])
@@ -181,10 +213,11 @@ def test_cc_driver_tier_is_memory_aware(spark):
             assert expect[n] == c
     finally:
         spark.conf.unset("spark.nametag.cc.driverEdgeCap")
+        spark.conf.unset("spark.nametag.cc.driverNodeCap")
 
 
 def test_cc_streaming_tier_multi_batch(spark, monkeypatch):
-    """The streaming tier must be exact across BATCH boundaries: force
+    """The streaming route must be exact across BATCH boundaries: force
     ~15 tiny Arrow batches so components span many ingests (the chain is
     the adversarial case — every batch must hook into labels established
     by earlier ones, and the final labels must be the global minimum)."""
@@ -198,13 +231,7 @@ def test_cc_streaming_tier_multi_batch(spark, monkeypatch):
     edges += [(rng.randrange(1000, 1200), rng.randrange(1000, 1200)) for _ in range(800)]
     edges = [(a, b) for a, b in edges if a != b]
     df = spark.createDataFrame(edges, ["src", "dst"]).repartition(8)
-    got = {
-        r["node"]: r["component"]
-        for r in R.connected_components(
-            df, driver_threshold=0, contracted_driver_threshold=0
-        ).collect()
-    }
-    assert R.LAST_CC_INFO["tier"] == "driver-streaming"
+    got = _cc_labels(spark, df, "streaming")
     expect = _uf_components(edges, set([a for a, _ in edges] + [b for _, b in edges]))
     for n, c in got.items():
         assert expect[n] == c
@@ -214,10 +241,9 @@ def test_cc_streaming_tier_multi_batch(spark, monkeypatch):
 def test_cc_streaming_tier_detects_unshared_spill(spark, monkeypatch):
     """If the spill dir is not actually shared (a real-cluster
     misconfiguration), the driver reads back fewer edges than were
-    written; the tier must raise instead of silently emitting singleton
+    written; the route must raise instead of silently emitting singleton
     components (r7 advisor, medium)."""
     import pyarrow.dataset as pads
-    import pytest
 
     import nametag_spark.kg.resolution as R
 
@@ -237,8 +263,10 @@ def test_cc_streaming_tier_detects_unshared_spill(spark, monkeypatch):
     monkeypatch.setattr(pads, "dataset", truncated_dataset)
     edges = [(i, i + 1) for i in range(1, 500)]
     df = spark.createDataFrame(edges, ["src", "dst"]).repartition(4)
-    with pytest.raises(RuntimeError, match="spill directory is not shared"):
-        R.connected_components(df, driver_threshold=0, contracted_driver_threshold=0)
+    with _cc_route(spark, "streaming"), pytest.raises(
+        RuntimeError, match="spill directory is not shared"
+    ):
+        R.connected_components(df)
 
 
 def test_minhash_similar_strings_collide(spark):
@@ -411,6 +439,25 @@ def test_build_knowledge_graph_resume(spark, tiny_model_dir, tmp_path):
         spark, sdf, tiny_model_dir, out, config={"resolution": {"jaccard_threshold": 0.9}}
     )
     assert res3["resumed"][0] is False or res3["resumed"][1] is False
+
+
+def test_resolve_entities_table_matches_built_entities_stage(spark, tiny_model_dir, tmp_path):
+    """resolve_entities' entity table (aggregated from the surface
+    assignment) and the `entities` stage build_knowledge_graph writes
+    (aggregated from mention_entities) are the same table."""
+    from nametag_spark.data.synth import synth_transcripts
+    from nametag_spark.kg.graph_io import build_knowledge_graph
+
+    tdf, _ = synth_transcripts(n_conversations=10, seed=21)
+    res = build_knowledge_graph(spark, spark.createDataFrame(tdf), tiny_model_dir, str(tmp_path / "g"))
+    cols = ["entity_id", "canonical", "type", "n_mentions", "n_surfaces"]
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select(*cols).collect())
+
+    built = rows(res["entities"])
+    assert len(built) > 0
+    assert rows(resolve_entities(res["mentions"])[1]) == built
 
 
 def test_partition_pruning_on_pred(spark, tmp_path):
