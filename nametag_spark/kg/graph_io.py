@@ -8,16 +8,22 @@ lineage + metrics". Each pipeline stage writes:
                                         input fingerprint, row count,
                                         per-file row counters, schema
 
-A stage re-runs only when its fingerprint (config + upstream fingerprint)
-changes; otherwise the parquet is reused as-is (exact resume — contents are
-deterministic given the fingerprint).
+A stage re-runs when its fingerprint (config + upstream fingerprint)
+changes or a file its manifest lists is gone; otherwise the parquet is reused
+as-is (exact resume — contents are deterministic given the fingerprint).
 
 Manifests come from the committed files, not a read-back: row counters from
 each file's parquet footer, the schema from the row schema Spark stores there
-(as inference would return it). Stages are read back with that schema, so no
-build or resume runs a counting or schema-inference job. Footers are read on
-the driver, so `out_dir` must be mounted there (it is already for the
-manifests). Manifests are replaced atomically (temp file + os.replace).
+(as inference would return it). Footers are read on the driver, so `out_dir`
+must be mounted there (it is already for the manifests). Manifests are
+replaced atomically (temp file + os.replace).
+
+Reads follow the manifest: `read_files` reads exactly the files a stage
+manifest (or, for the incremental mention store, `_batches.json`) lists, with
+the stored schema, and Spark stats them on the driver instead of listing the
+directory. A file the manifest does not list is never served, so no build
+runs a counting, schema-inference or listing job, and a resumed build
+launches no Spark job at all.
 """
 
 from __future__ import annotations
@@ -25,8 +31,10 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import shutil
 import tempfile
 import time
+from urllib.parse import unquote
 
 import pyarrow.dataset as pads
 import pyarrow.parquet as pq
@@ -36,6 +44,8 @@ from pyspark.sql.types import StructField, StructType
 # footer key under which Spark's parquet writer stores the row schema
 _SPARK_ROW_SCHEMA = b"org.apache.spark.sql.parquet.row.metadata"
 _NULLABLE = ("nullable", "containsNull", "valueContainsNull")
+# over this many paths, Spark lists them with a distributed job
+_DISCOVERY_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
 
 
 def _fingerprint(obj) -> str:
@@ -82,6 +92,33 @@ def _data_files(path: str) -> list:
     if not os.path.exists(path):
         return []
     return sorted(os.path.relpath(f, path) for f in pads.dataset(path, format="parquet").files)
+
+
+def read_files(spark: SparkSession, path: str, files: list, schema: dict) -> DataFrame:
+    """The parquet `files` (relative to path) read with the JSON `schema`, and
+    with basePath=path so partition columns come from the file paths.
+
+    Spark stats the listed files on the driver and lists nothing: for this
+    read the discovery threshold is set to the number of files, so no
+    parallel-listing job runs; the session's value is restored afterwards.
+    """
+    previous = spark.conf.get(_DISCOVERY_THRESHOLD, None)
+    spark.conf.set(_DISCOVERY_THRESHOLD, str(len(files)))
+    try:
+        return (
+            spark.read.schema(StructType.fromJson(schema))
+            .option("basePath", path)
+            .parquet(*(os.path.join(path, f) for f in files))
+        )
+    finally:
+        if previous is None:
+            spark.conf.unset(_DISCOVERY_THRESHOLD)
+        else:
+            spark.conf.set(_DISCOVERY_THRESHOLD, previous)
+
+
+def _listed_files(manifest: dict) -> list:
+    return [p["file"] for p in manifest["partitions"]]
 
 
 def _as_nullable(t):
@@ -157,10 +194,15 @@ def run_stage(
     fp = _fingerprint(fingerprint_inputs)
     manifest = read_manifest(out_dir, stage)
     path = stage_path(out_dir, stage)
-    resumed = bool(manifest and manifest.get("fingerprint") == fp and os.path.exists(path))
+    resumed = bool(
+        manifest
+        and manifest.get("fingerprint") == fp
+        and os.path.isdir(path)
+        and all(os.path.isfile(os.path.join(path, f)) for f in _listed_files(manifest))
+    )
     if not resumed:
         manifest = write_stage(build(), out_dir, stage, fp, partition_by)
-    df = spark.read.schema(StructType.fromJson(manifest["schema"])).parquet(path)
+    df = read_files(spark, path, _listed_files(manifest), manifest["schema"])
     return df, manifest, resumed
 
 
@@ -180,7 +222,9 @@ def append_mentions(
     standard pattern).
 
     Idempotent per batch_id: re-appending an already-ingested batch is a
-    no-op (recorded in the batches manifest).
+    no-op (recorded in the batches manifest). A batch counts once the
+    manifest records it with its files; files an earlier, failed append of
+    the same batch_id left behind are deleted before it is written again.
     """
     from ..ner.pipeline import recognize_df
 
@@ -191,24 +235,39 @@ def append_mentions(
     if batch_id in batches:
         return {"batch_id": batch_id, "rows": batches[batch_id]["rows"], "appended": False}
 
+    if os.path.isdir(path):
+        for d in os.listdir(path):
+            if unquote(d) == f"ingest_batch={batch_id}":
+                shutil.rmtree(os.path.join(path, d))
+
     mentions = recognize_df(new_transcripts, model_dir).withColumn(
         "ingest_batch", F.lit(batch_id)
     )
     before = set(_data_files(path))
     mentions.write.mode("append").partitionBy("ingest_batch").parquet(path)
-    _, rows, schema = _committed(mentions, path, ["ingest_batch"], before)
-    batches[batch_id] = {"rows": sum(rows), "written_at": time.time(), "schema": schema}
+    files, rows, schema = _committed(mentions, path, ["ingest_batch"], before)
+    batches[batch_id] = {
+        "rows": sum(rows), "files": files, "written_at": time.time(), "schema": schema
+    }
     _write_json(manifest_path, batches)
     # existence of new mentions invalidates the downstream fingerprint chain
     return {"batch_id": batch_id, "rows": sum(rows), "appended": True}
 
 
 def read_incremental_mentions(spark: SparkSession, out_dir: str) -> DataFrame:
-    """The mention store, read with the schema its latest batch recorded."""
-    schema = list(_read_json(_batches_path(out_dir)).values())[-1]["schema"]
-    return spark.read.schema(StructType.fromJson(schema)).parquet(
-        stage_path(out_dir, "mentions_incremental")
-    )
+    """The files of every recorded batch of the mention store, read with the
+    schema its latest batch recorded."""
+    manifest_path = _batches_path(out_dir)
+    batches = _read_json(manifest_path)
+    unlisted = [b for b, m in batches.items() if "files" not in m]
+    if unlisted:
+        raise ValueError(
+            f"{manifest_path} records no files for batches {unlisted}: re-ingest the store "
+            "(delete it and its _batches.json, then append_mentions every batch again)"
+        )
+    files = [f for m in batches.values() for f in m["files"]]
+    schema = list(batches.values())[-1]["schema"]
+    return read_files(spark, stage_path(out_dir, "mentions_incremental"), files, schema)
 
 
 def incremental_batches_fingerprint(out_dir: str) -> str:

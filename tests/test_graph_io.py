@@ -1,9 +1,10 @@
-"""graph_io manifests: footer-derived row counters and schema, schema-pinned
-reads, atomic manifest writes, and the Spark jobs a stage write or resume
-launches."""
+"""graph_io manifests: footer-derived row counters and schema, reads of
+exactly the files a manifest lists, atomic manifest writes, and the Spark jobs
+a stage write or resume launches."""
 
 import json
 import os
+import shutil
 from urllib.parse import unquote, urlparse
 
 import pandas as pd
@@ -22,6 +23,7 @@ from nametag_spark.kg.graph_io import (
 )
 
 STAGES = ["mentions", "mention_entities", "entities", "triples"]
+THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
 
 
 def _jobs(spark, group, fn):
@@ -67,6 +69,40 @@ def built(spark, tiny_model_dir, tmp_path_factory):
     return out, sdf, build_knowledge_graph(spark, sdf, tiny_model_dir, out)
 
 
+@pytest.fixture(scope="module")
+def store(spark, tiny_model_dir, tmp_path_factory):
+    """A fixture mention store of two appended batches: its out_dir."""
+    out = str(tmp_path_factory.mktemp("graph_io") / "inc")
+    batches = {
+        "batch-1": _transcripts(spark, 4, 41),
+        "batch-2": _transcripts(spark, 4, 42, "-b2"),
+    }
+    for batch_id, sdf in batches.items():
+        assert append_mentions(spark, sdf, tiny_model_dir, out, batch_id)["appended"]
+    return out
+
+
+@pytest.fixture
+def low_threshold(spark):
+    """The session's parallel-listing threshold lowered to 1, so that a
+    directory listing of more than one partition directory would launch a
+    Spark job; the previous value is restored afterwards."""
+    previous = spark.conf.get(THRESHOLD, None)
+    spark.conf.set(THRESHOLD, "1")
+    yield "1"
+    if previous is None:
+        spark.conf.unset(THRESHOLD)
+    else:
+        spark.conf.set(THRESHOLD, previous)
+
+
+def _copy(built, tmp_path):
+    """A copy of the fixture graph's out_dir, which resumes like the original."""
+    out = str(tmp_path / "graph")
+    shutil.copytree(built[0], out)
+    return out
+
+
 def test_stage_manifests_match_spark(spark, tiny_model_dir, built):
     """Footer row counters and stored schema equal what Spark reads back,
     for every stage (the triples partitioned by pred), and the frames a
@@ -86,25 +122,23 @@ def test_stage_manifests_match_spark(spark, tiny_model_dir, built):
         assert again[name].schema == schema
 
 
-def test_incremental_store_manifest_matches_spark(spark, tiny_model_dir, tmp_path):
-    out = str(tmp_path / "inc")
-    batches = {
-        "batch-1": _transcripts(spark, 4, 41),
-        "batch-2": _transcripts(spark, 4, 42, "-b2"),
-    }
-    for batch_id, sdf in batches.items():
-        assert append_mentions(spark, sdf, tiny_model_dir, out, batch_id)["appended"]
-    path = stage_path(out, "mentions_incremental")
-    with open(os.path.join(out, "mentions_incremental._batches.json"), encoding="utf-8") as f:
+def test_incremental_store_manifest_matches_spark(spark, tiny_model_dir, store):
+    path = stage_path(store, "mentions_incremental")
+    with open(os.path.join(store, "mentions_incremental._batches.json"), encoding="utf-8") as f:
         manifest = json.load(f)
     back = spark.read.parquet(path)
     counts = back.groupBy("ingest_batch").count().collect()
     per_batch = {r["ingest_batch"]: r["count"] for r in counts}
     assert {b: m["rows"] for b, m in manifest.items()} == per_batch
-    for m in manifest.values():
+    files = _rows_per_file(spark, path)
+    for batch_id, m in manifest.items():
         assert StructType.fromJson(m["schema"]) == back.schema
-    assert read_incremental_mentions(spark, out).schema == back.schema
-    g = build_knowledge_graph(spark, None, tiny_model_dir, out, incremental=True)
+        assert all(f.startswith(f"ingest_batch={batch_id}/") for f in m["files"])
+        assert {f: n for f, n in files.items() if f in m["files"]} == {
+            f: n for f, n in files.items() if f.startswith(f"ingest_batch={batch_id}/")
+        }
+    assert read_incremental_mentions(spark, store).schema == back.schema
+    g = build_knowledge_graph(spark, None, tiny_model_dir, store, incremental=True)
     assert g["mentions"].schema == back.drop("ingest_batch").schema
     assert g["mentions"].count() == sum(per_batch.values())
 
@@ -175,6 +209,71 @@ def test_batches_manifest_write_is_atomic(spark, tiny_model_dir, tmp_path, monke
     assert sorted(os.listdir(out)) == names
 
 
+def test_store_serves_only_recorded_batches(spark, tiny_model_dir, tmp_path, monkeypatch):
+    """The parquet of an append whose manifest write failed is not served,
+    and a retry of that batch stores each of its rows exactly once."""
+    out = str(tmp_path / "inc")
+    b1 = _transcripts(spark, 2, 41)
+    b2 = _transcripts(spark, 2, 42, "-b2")
+    append_mentions(spark, b1, tiny_model_dir, out, "batch-1")
+    first = sorted(map(tuple, read_incremental_mentions(spark, out).collect()))
+    monkeypatch.setattr(json, "dump", _failing_dump)
+    with pytest.raises(OSError, match="disk full"):
+        append_mentions(spark, b2, tiny_model_dir, out, "batch-2")
+    monkeypatch.undo()
+    orphan = os.path.join(stage_path(out, "mentions_incremental"), "ingest_batch=batch-2")
+    assert os.path.isdir(orphan)
+    assert sorted(map(tuple, read_incremental_mentions(spark, out).collect())) == first
+
+    r = append_mentions(spark, b2, tiny_model_dir, out, "batch-2")
+    assert r["appended"] and r["rows"] > 0
+    back = read_incremental_mentions(spark, out)
+    assert back.where(F.col("ingest_batch") == "batch-2").count() == r["rows"]
+    raw = spark.read.parquet(stage_path(out, "mentions_incremental"))
+    assert raw.where(F.col("ingest_batch") == "batch-2").count() == r["rows"]
+
+
+def test_store_without_file_lists_asks_to_reingest(spark, store, tmp_path):
+    out = str(tmp_path / "inc")
+    shutil.copytree(store, out)
+    manifest_path = os.path.join(out, "mentions_incremental._batches.json")
+    with open(manifest_path, encoding="utf-8") as f:
+        batches = json.load(f)
+    del batches["batch-1"]["files"]
+    with open(manifest_path, "w", encoding="utf-8") as f:
+        json.dump(batches, f)
+    with pytest.raises(ValueError, match="re-ingest"):
+        read_incremental_mentions(spark, out)
+
+
+def test_resume_rebuilds_a_stage_with_a_missing_file(spark, tiny_model_dir, built, tmp_path):
+    """A resume whose manifest lists a file that is gone rebuilds that stage
+    instead of serving it short."""
+    out = _copy(built, tmp_path)
+    want = read_manifest(out, "triples")
+    lost = next(p["file"] for p in want["partitions"] if p["rows"] and "pred=" in p["file"])
+    os.remove(os.path.join(stage_path(out, "triples"), lost))
+    res = build_knowledge_graph(spark, built[1], tiny_model_dir, out)
+    assert res["resumed"] == [True, True, True, False]
+    assert res["manifests"][3]["rows"] == want["rows"]
+    assert res["triples"].count() == want["rows"]
+    _check_manifest(spark, stage_path(out, "triples"), res["manifests"][3])
+
+
+def test_resume_serves_only_listed_files(spark, tiny_model_dir, built, tmp_path):
+    """A stray parquet file copied into a stage directory is not served."""
+    out = _copy(built, tmp_path)
+    manifest = read_manifest(out, "triples")
+    part = next(p for p in manifest["partitions"] if p["rows"] and "pred=" in p["file"])
+    path = stage_path(out, "triples")
+    src = os.path.join(path, part["file"])
+    shutil.copy(src, os.path.join(os.path.dirname(src), "part-99999-stray.snappy.parquet"))
+    res = build_knowledge_graph(spark, built[1], tiny_model_dir, out)
+    assert res["resumed"] == [True] * 4
+    assert res["triples"].count() == manifest["rows"]
+    assert spark.read.parquet(path).count() == manifest["rows"] + part["rows"]
+
+
 @pytest.mark.parametrize("partition_by", [None, ["pred"]])
 def test_stage_write_launches_only_the_write_jobs(spark, tmp_path, partition_by):
     """run_stage over a persisted frame launches exactly the jobs of a bare
@@ -196,15 +295,56 @@ def test_stage_write_launches_only_the_write_jobs(spark, tmp_path, partition_by)
     assert manifest["rows"] == 200 and back.count() == 200
 
 
-def test_resumed_build_launches_no_jobs(spark, tiny_model_dir, built):
-    """A resume reads four manifests and pins four schemas: no Spark job,
-    except Spark's parallel listing of a triples stage with more pred
-    directories than parallelPartitionDiscovery.threshold."""
+def test_resumed_build_launches_no_jobs(spark, tiny_model_dir, built, low_threshold):
+    """A resume reads four manifests and the files they list: no Spark job,
+    even when the triples stage has more pred directories than the
+    parallel-listing threshold."""
     out, sdf, _ = built
+    preds = [d for d in os.listdir(stage_path(out, "triples")) if d.startswith("pred=")]
+    assert len(preds) > int(low_threshold)
     n, res = _jobs(
         spark, "graph_io-resume", lambda: build_knowledge_graph(spark, sdf, tiny_model_dir, out)
     )
     assert res["resumed"] == [True] * 4
-    preds = [d for d in os.listdir(stage_path(out, "triples")) if d.startswith("pred=")]
-    threshold = int(spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold"))
-    assert n <= (1 if len(preds) > threshold else 0), (n, len(preds), threshold)
+    assert n == 0
+    assert spark.conf.get(THRESHOLD) == low_threshold
+
+
+def test_incremental_resume_launches_no_jobs(spark, tiny_model_dir, store, low_threshold):
+    """An incremental build over an unchanged mention store resumes with no
+    Spark job; the store has more batch directories than the threshold."""
+    def build():
+        return build_knowledge_graph(spark, None, tiny_model_dir, store, incremental=True)
+
+    build()
+    assert len(os.listdir(stage_path(store, "mentions_incremental"))) > int(low_threshold)
+    n, res = _jobs(spark, "graph_io-inc-resume", build)
+    assert res["resumed"] == [True] * 4
+    assert n == 0
+    assert spark.conf.get(THRESHOLD) == low_threshold
+
+
+@pytest.mark.parametrize("lowered", [False, True])
+def test_reads_restore_the_discovery_threshold(
+    spark, tiny_model_dir, built, store, tmp_path, request, lowered
+):
+    """A build, a resume and a read that raises all leave the session's
+    parallel-listing threshold as they found it, set or unset."""
+    if lowered:
+        request.getfixturevalue("low_threshold")
+    before = spark.conf.get(THRESHOLD, None)
+    out = _copy(built, tmp_path)
+    lost = read_manifest(out, "entities")["partitions"][0]["file"]
+    os.remove(os.path.join(stage_path(out, "entities"), lost))
+    for resumed in ([True, True, False, True], [True] * 4):  # a build, then a resume
+        assert build_knowledge_graph(spark, built[1], tiny_model_dir, out)["resumed"] == resumed
+        assert spark.conf.get(THRESHOLD, None) == before
+
+    inc = str(tmp_path / "inc")
+    shutil.copytree(store, inc)
+    with open(os.path.join(inc, "mentions_incremental._batches.json"), encoding="utf-8") as f:
+        lost = json.load(f)["batch-2"]["files"][0]
+    os.remove(os.path.join(stage_path(inc, "mentions_incremental"), lost))
+    with pytest.raises(Exception, match="PATH_NOT_FOUND|does not exist"):
+        read_incremental_mentions(spark, inc)
+    assert spark.conf.get(THRESHOLD, None) == before

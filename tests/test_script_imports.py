@@ -1,11 +1,14 @@
 """Stale-import guard for the entry points no tier-1 test runs: every name
-that scripts/*.py, bench.py and bench_extra.py import from nametag_spark,
-and every attribute they read off an imported nametag_spark module, must
-still exist. Parses the files with ast; no Spark session."""
+that scripts/*.py, perfbench/*.py, bench.py and bench_extra.py import from
+nametag_spark, and every attribute they read off an imported nametag_spark
+module, must still exist, and every call of an imported nametag_spark
+function must still bind to its signature. Parses the files with ast (read
+only); no Spark session."""
 
 import ast
 import glob
 import importlib
+import inspect
 import os
 import types
 
@@ -14,6 +17,7 @@ import pytest
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 FILES = sorted(
     glob.glob(os.path.join(ROOT, "scripts", "**", "*.py"), recursive=True)
+    + glob.glob(os.path.join(ROOT, "perfbench", "*.py"))
     + [os.path.join(ROOT, "bench.py"), os.path.join(ROOT, "bench_extra.py")]
 )
 
@@ -29,10 +33,26 @@ def _imported(module: str, name: str):
         return None
 
 
+def _binds(fn, call: ast.Call) -> bool:
+    """Whether call's arguments bind to fn's signature; a call that spreads
+    *args or **kwargs is not checked."""
+    if any(isinstance(a, ast.Starred) for a in call.args) or any(
+        k.arg is None for k in call.keywords
+    ):
+        return True
+    try:
+        inspect.signature(fn).bind(*call.args, **{k.arg: k.value for k in call.keywords})
+    except TypeError:
+        return False
+    return True
+
+
 def _stale_names(path: str) -> list:
-    tree = ast.parse(open(path, encoding="utf-8").read(), filename=path)
+    with open(path, encoding="utf-8") as f:
+        tree = ast.parse(f.read(), filename=path)
     stale = []
     modules = {}  # local name -> the nametag_spark module bound to it
+    functions = {}  # local name -> the nametag_spark function bound to it
     for node in ast.walk(tree):
         if isinstance(node, ast.ImportFrom) and (node.module or "").startswith("nametag_spark"):
             for a in node.names:
@@ -41,6 +61,8 @@ def _stale_names(path: str) -> list:
                     stale.append(f"{node.lineno}: from {node.module} import {a.name}")
                 elif isinstance(obj, types.ModuleType):
                     modules[a.asname or a.name] = obj
+                elif inspect.isfunction(obj):
+                    functions[a.asname or a.name] = obj
         elif isinstance(node, ast.Import):
             for a in node.names:
                 if a.name.startswith("nametag_spark") and a.asname:
@@ -53,13 +75,33 @@ def _stale_names(path: str) -> list:
             and not hasattr(modules[node.value.id], node.attr)
         ):
             stale.append(f"{node.lineno}: {node.value.id}.{node.attr}")
+        elif (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Name)
+            and node.func.id in functions
+            and not _binds(functions[node.func.id], node)
+        ):
+            stale.append(f"{node.lineno}: call of {node.func.id}")
     return stale
 
 
 def test_guard_covers_the_entry_points():
     names = {os.path.relpath(f, ROOT) for f in FILES}
-    assert {"bench.py", "bench_extra.py"} <= names
+    assert {"bench.py", "bench_extra.py", "perfbench/run.py"} <= names
     assert any(n.startswith("scripts/") for n in names)
+
+
+def test_guard_checks_call_signatures():
+    """A call that no longer binds is reported (checked on a parsed snippet)."""
+    from nametag_spark.kg.graph_io import run_stage
+
+    def call(src):
+        return ast.parse(src).body[0].value
+
+    assert _binds(run_stage, call("run_stage(spark, out, name, fp, build, part)"))
+    assert _binds(run_stage, call("run_stage(*args)"))
+    assert not _binds(run_stage, call("run_stage(spark, out, name, fp)"))
+    assert not _binds(run_stage, call("run_stage(spark, out, name, fp, build, stage_cols=part)"))
 
 
 @pytest.mark.parametrize("path", FILES, ids=lambda p: os.path.relpath(p, ROOT))
