@@ -60,7 +60,6 @@ class Sentence:
         "external",
         "_fast_token_keys",  # ner.fast memo (morphology fixed across stages)
         "_pins_memo",  # ner.fast pin-effect snapshot (stage-invariant)
-        "_soft_events",  # ner.fast gazetteer soft features as (pos, fid) arrays
         "_gaz_sources",  # per-processor recased match sources (stage-invariant)
         "_gaz_hp_skip",  # proc ids whose hard_post walk provably can't match
         "_shared_memo",  # content-keyed memo store shared across instances
@@ -750,7 +749,7 @@ class GazetteersEnhanced(FeatureProcessor):
     def _key_entry(self, key, form, texts):
         """(sources, first-step nodes, first-step summary) for one token,
         cached per match key — the pure per-token core of the trie walk,
-        shared by the per-sentence path and ner.fast's batched path."""
+        shared by process_sentence and ner.fast's batched pins."""
         cache = getattr(self, "_tok_cache", None)
         if cache is None:
             cache = self._tok_cache = {}

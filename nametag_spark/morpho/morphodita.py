@@ -2071,7 +2071,7 @@ class MorphoditaTagger:
         # functions of the sentence's morphology, so Sentence instances
         # rebuilt from this cache entry share their computed walks
         # ({"gaz": {...}} filled by templates._sentence_sources, "pins" by
-        # ner.fast.apply_pins)
+        # ner.fast.FastFeaturizer.pins_batch)
         v = (raw_forms, comments, raws, lids, tags, None, keys, {"gaz": {}})
         if len(cache) > 100_000:
             cache.clear()

@@ -1,20 +1,22 @@
 """Vectorized inference featurizer (physical optimization of SURVEY.md §2.4).
 
-Semantics are identical to features.templates (the reference-shaped slow
-path, which remains the source of truth and is used for training); this
-module only changes the *physical* strategy for inference:
+Semantics are identical to features.templates, whose per-sentence
+processors (driven by NerModel.recognize_sentence) remain the source of
+truth and the training path; this module only changes the *physical*
+strategy for inference, over flat arrays spanning a whole batch:
 
   - per-form memoization: most templates (Form, Capitalization,
     CaseNormalized, Suffix, RawLemma*, Lemma, Tag, NumericTimeValue) derive
     features from the token string alone, and form frequency is Zipfian, so
     the per-token template work collapses to one dict hit per token
   - window replication (feature + w - i over [i-window, i+window]) becomes
-    a handful of numpy shifts per sentence instead of per-position appends
+    a handful of numpy shifts per batch instead of per-position appends
   - URL/email hard-pin decisions are memoized per form
-  - stateful processors (PreviousStage) and trie processors
-    (GazetteersEnhanced) run their exact reference-shaped logic
+  - gazetteer processors (Gazetteers, GazetteersEnhanced) walk only from
+    tokens whose first step can match, emitting the reference's events in
+    its order; PreviousStage reads the previous stage's flat decode
 
-Parity between this path and the slow path is asserted in tests.
+Parity with NerModel.recognize_sentence is asserted in tests.
 """
 
 from __future__ import annotations
@@ -58,91 +60,17 @@ _OUTER = (
 )
 
 
-def _token_feature_ids(proc, form, raw=None, lid=None, tag="", comments=""):
-    """Replicates the per-token body of each pure processor, returning the
-    base feature ids it would apply_in_window at this token.
-
-    raw/lid/tag/comments are the token's morphology (raw_lemma, lemma_id,
-    tag, lemma_comments); under the trivial tagger raw=lid=form and
-    tag=comments=''. Context-dependent taggers are fine: the featurizer
-    keys its memoization on the full tuple, not the bare form."""
-    if raw is None:
-        raw = form
-    if lid is None:
-        lid = form
-    out = []
-    if isinstance(proc, T.CzechLemmaTerm):
-        # `_;X` term chars of the lemma comments (templates.py:929-936)
-        for pos in range(max(0, len(comments) - 2)):
-            if comments[pos] == "_" and comments[pos + 1] == ";":
-                out.append(proc.map.get(comments[pos + 2]))
-        return [(f, proc.window) for f in out if f is not None]
-    if isinstance(proc, T.BrownClusters):
-        cid = proc.map.get(raw)  # keyed on raw_lemma (templates.py slow path)
-        if cid is not None:
-            return [(f, proc.window) for f in proc.clusters[cid]]
-        return []
-    if isinstance(proc, (T.FormCapitalization, T.RawLemmaCapitalization)):
-        src = raw if isinstance(proc, T.RawLemmaCapitalization) else form
-        was_upper = was_lower = False
-        for k, ch in enumerate(src):
-            c = T._cat(ch)
-            was_upper = was_upper or c in ("Lu", "Lt")
-            was_lower = was_lower or c == "Ll"
-            if k == 0 and was_upper:
-                out.append(proc.map.get("f"))
-        if was_upper and not was_lower:
-            out.append(proc.map.get("a"))
-        if was_upper and was_lower:
-            out.append(proc.map.get("m"))
-    elif isinstance(proc, T.Suffix):
-        f = raw if isinstance(proc, (T.RawLemmaSuffix, T.RawLemmaCaseNormalizedSuffix)) else form
-        f = T._case_normalize(f) if proc.normalized else f
-        buf = []
-        for s in range(1, min(proc.longest, len(f)) + 1):
-            buf.append(f[len(f) - s])
-            if s >= proc.shortest:
-                out.append(proc.map.get("".join(buf)))
-    elif isinstance(proc, T.NumericTimeValue):
-        k = 0
-        num = 0
-        while k < len(form) and "0" <= form[k] <= "9":
-            num = num * 10 + ord(form[k]) - 48
-            k += 1
-        digit = k > 0
-        if digit and k == len(form):
-            if num < 24:
-                out.append(proc.map.get("H"))
-            if num < 60:
-                out.append(proc.map.get("M"))
-            if 1 <= num <= 31:
-                out.append(proc.map.get("d"))
-            if 1 <= num <= 12:
-                out.append(proc.map.get("m"))
-            if 1000 <= num <= 2200:
-                out.append(proc.map.get("y"))
-        if digit and num < 24 and k < len(form) and form[k] in ".:":
-            k += 1
-            start = k
-            num = 0
-            while k < len(form) and "0" <= form[k] <= "9":
-                num = num * 10 + ord(form[k]) - 48
-                k += 1
-            if k > start and k == len(form) and num < 60:
-                out.append(proc.map.get("t"))
-    elif isinstance(proc, T.Tag):
-        out.append(proc.map.get(tag))
-    elif isinstance(proc, T.RawLemmaCaseNormalized):
-        out.append(proc.map.get(T._case_normalize(raw)))
-    elif isinstance(proc, T.FormCaseNormalized):
-        out.append(proc.map.get(T._case_normalize(form)))
-    elif isinstance(proc, T.RawLemma):
-        out.append(proc.map.get(raw))
-    elif isinstance(proc, T.Lemma):
-        out.append(proc.map.get(lid))
-    else:  # Form — identity lookup
-        out.append(proc.map.get(form))
-    return [(f, proc.window) for f in out if f is not None]
+def _window_events(src, val, window, lo, hi):
+    """apply_in_window over flat arrays: base event (src, val) becomes
+    (t, val + t - src) for every target t of [src - window, src + window]
+    inside the sentence [lo, hi). Each event expands contiguously, so a
+    stable sort by target keeps the base events' order at every token."""
+    src = np.asarray(src, dtype=np.int64)
+    val = np.asarray(val, dtype=np.int64)
+    offs = np.arange(-window, window + 1, dtype=np.int64)
+    tgt = src[:, None] + offs
+    ok = ((tgt >= lo[src][:, None]) & (tgt < hi[src][:, None])).ravel()
+    return tgt.ravel()[ok], (val[:, None] + offs).ravel()[ok]
 
 
 class FastFeaturizer:
@@ -156,22 +84,6 @@ class FastFeaturizer:
             for p in procs
             if isinstance(p, (T.URLEmailDetector, T.GazetteersEnhanced, T.Gazetteers))
         ]
-        # CzechAddContainers runs at process_entities time only; anything
-        # else unknown forces the slow (reference-shaped) path
-        known = _PURE + (
-            T.PreviousStage,
-            T.URLEmailDetector,
-            T.GazetteersEnhanced,
-            T.Gazetteers,
-            T.CzechAddContainers,
-        )
-        self.supported = all(isinstance(p, known) for p in procs)
-        # the fully-batched pin path covers URL/email + enhanced gazetteers;
-        # deprecated plain Gazetteers keeps the per-sentence reference walk
-        self.batch_pins_ok = all(
-            isinstance(p, (T.URLEmailDetector, T.GazetteersEnhanced))
-            for p in self.pin_procs
-        )
         self.form_cache: dict = {}
         self.pin_cache: dict = {}
         self.outer_cache: dict = {}
@@ -182,7 +94,6 @@ class FastFeaturizer:
             if isinstance(p, _OUTER):
                 outer_windows[p.window] = outer_windows.get(p.window, 0) + 1
         self.outer_windows = sorted(outer_windows.items())
-        self.url_procs = [p for p in procs if isinstance(p, T.URLEmailDetector)]
 
     def _token_keys(self, sent):
         """Per-token memoization keys. Trivial-tagger sentences key on the
@@ -213,8 +124,9 @@ class FastFeaturizer:
         function (same technique as FeatureSequences._compile_group): the
         per-key event generation was ~13 dispatched calls + list merges per
         unseen form, which dominated the wide-vocabulary miss path. Bodies
-        mirror _token_feature_ids exactly — same processor order, same
-        per-processor event order, same None filtering."""
+        mirror each processor's templates.py process_sentence per token —
+        same processor order, same per-processor event order, same None
+        filtering."""
         src = [
             "def _events_fn(form, raw, lid, tag, comments):",
             " fs = []; ws = []",
@@ -311,21 +223,6 @@ class FastFeaturizer:
         fn = self._events_fn = ns["_events_fn"]
         return fn
 
-    def _form_events(self, key):
-        ev = self.form_cache.get(key)
-        if ev is None:
-            if isinstance(key, tuple):
-                form, raw, lid, tag, comments = key
-            else:
-                form, raw, lid, tag, comments = key, key, key, "", ""
-            fn = getattr(self, "_events_fn", None) or self._compile_events()
-            fs, ws_l = fn(form, raw, lid, tag, comments)
-            fids = np.array(fs, dtype=np.int64)
-            ws = np.array(ws_l, dtype=np.int64)
-            ev = (fids, ws, len(fs))
-            self.form_cache[key] = ev
-        return ev
-
     def _outer_pattern(self, Tn: int):
         """Expanded outer-word features for a sentence of length Tn, as
         (rel_pos, value) arrays — depends only on Tn, so cached."""
@@ -345,113 +242,23 @@ class FastFeaturizer:
             self.outer_cache[Tn] = pat
         return pat
 
-    def apply_pins(self, sent):
-        """Run pin-capable processors in template order (local_filled
-        interactions preserved). URLEmailDetector decisions are memoized.
-
-        Pin effects are stage-invariant — each stage starts from freshly
-        zeroed local/local_filled and the processors read only per-token
-        morphology (fixed across stages) — so the first stage's effects
-        (soft-feature events + pinned probability rows) are snapshot on the
-        sentence and replayed for later stages instead of re-walking the
-        gazetteer tries. Soft features are snapshot as (pos, fid) arrays
-        (``sent._soft_events``) so the scorer never walks per-token lists."""
-        memo = getattr(sent, "_pins_memo", None)
-        if memo is None:
-            shared = getattr(sent, "_shared_memo", None)
-            if shared is not None:
-                # pins are a pure function of sentence content + model
-                # processors: reuse another instance's snapshot of the same
-                # cached text (keyed by model identity — taggers could in
-                # principle be shared between models)
-                memo = shared.get(("pins", id(self.model)))
-        if memo is not None:
-            soft, filled_idx, rows, ents = memo
-            sent._soft_events = soft
-            if filled_idx is not None and len(filled_idx):
-                sent.local[filled_idx] = rows
-                sent.local_ent[filled_idx] = ents
-                lf = sent.local_filled
-                if isinstance(lf, list):
-                    for i in filled_idx:
-                        lf[i] = True
-                else:
-                    lf[filled_idx] = True
-            return
-        self._apply_pins_uncached(sent)
-        feats = sent.features
-        if feats is not None:
-            pos = []
-            fid = []
-            for i, lst in enumerate(feats):
-                if lst:
-                    pos.extend([i] * len(lst))
-                    fid.extend(lst)
-            soft = (np.array(pos, dtype=np.int64), np.array(fid, dtype=np.int64)) if pos else None
-        else:
-            soft = None
-        sent._soft_events = soft
-        filled_idx = np.flatnonzero(np.asarray(sent.local_filled, dtype=bool))
-        sent._pins_memo = (
-            soft,
-            filled_idx,
-            sent.local[filled_idx].copy() if len(filled_idx) else None,
-            sent.local_ent[filled_idx].copy() if len(filled_idx) else None,
-        )
-        shared = getattr(sent, "_shared_memo", None)
-        if shared is not None:
-            shared[("pins", id(self.model))] = sent._pins_memo
-
-    def _apply_pins_uncached(self, sent):
-        for p in self.model.templates.processors:
-            if isinstance(p, T.URLEmailDetector):
-                for i, form in enumerate(sent.forms):
-                    if sent.local_filled[i]:
-                        continue
-                    pin = self.pin_cache.get(form)
-                    if pin is None:
-                        kind = T.classify_url_email(form)
-                        if kind == "EMAIL":
-                            pin = ("E", p.email)
-                        elif kind == "URL":
-                            pin = ("U", p.url)
-                        else:
-                            pin = (None, None)
-                        self.pin_cache[form] = pin
-                    if pin[0] is not None:
-                        sent.local[i, :] = 0.0
-                        sent.local_ent[i, :] = T.ENTITY_UNKNOWN
-                        sent.local[i, T.BILOU_U] = 1.0
-                        sent.local_ent[i, T.BILOU_U] = pin[1]
-                        sent.local_filled[i] = True
-            elif isinstance(p, (T.GazetteersEnhanced, T.Gazetteers)):
-                # trie/prefix walk + hard_pre pins + soft feature appends
-                # (into sent.features, merged by featurize())
-                p.process_sentence(sent)
-
     # ---------------------------------------------------------- batched pins
     def _url_kind_table(self, uniques):
-        """Per-unique URL/email pin kind (0 none, 1 email, 2 url), backed by
-        the same per-form pin_cache as the per-sentence path."""
+        """Per-unique URL/email pin kind (0 none, 1 email, 2 url), memoized
+        per form in pin_cache."""
         pc = self.pin_cache
         classify = T.classify_url_email
         kinds = np.zeros(len(uniques), dtype=np.int8)
         for u, key in enumerate(uniques):
             form = key[0] if isinstance(key, tuple) else key
-            pin = pc.get(form)
-            if pin is None:
-                kind = classify(form)
-                # entity slot resolved at scatter time from the processor;
-                # the cache stores the kind marker as before
-                pin = ("E", None) if kind == "EMAIL" else ("U", None) if kind == "URL" else (None, None)
+            kind = pc.get(form)
+            if kind is None:
+                c = classify(form)
+                kind = 1 if c == "EMAIL" else 2 if c == "URL" else 0
                 if len(pc) > 500_000:
                     pc.clear()
-                pc[form] = pin
-            k = pin[0]
-            if k == "E":
-                kinds[u] = 1
-            elif k == "U":
-                kinds[u] = 2
+                pc[form] = kind
+            kinds[u] = kind
         return kinds
 
     def _gaz_tables(self, p, batch, live):
@@ -528,8 +335,11 @@ class FastFeaturizer:
 
         Replays per-sentence memos where available and runs the batched
         (dead-token-skipping) URL/gazetteer machinery for fresh sentences,
-        preserving the per-sentence path's exact processor order, per-token
-        feature order, dedup, and filled-gating semantics (parity-tested).
+        preserving the reference processors' (templates.py process_sentence)
+        processor order, per-token features, dedup, and filled-gating
+        semantics (parity-tested). Per-token event order equals the
+        reference's, except after a multi-token GazetteersEnhanced walk,
+        whose events follow walk order.
 
         Returns (soft_pos, soft_fid, fill_idx, fill_rows, fill_ents):
         gazetteer soft features as position-sorted flat event arrays plus the
@@ -565,7 +375,6 @@ class FastFeaturizer:
                 local[gi] = rows
                 local_ent[gi] = ents
                 filled[gi] = True
-            s._soft_events = soft
             s._pins_memo = memo
 
         any_fresh = bool(fresh_sents)
@@ -620,15 +429,9 @@ class FastFeaturizer:
                             - np.repeat(cum - l2, l2)
                             + np.repeat(off2, l2)
                         )
-                        src = np.repeat(st2, l2)
-                        val = vals_flat[gather]
-                        offs = np.arange(-p.window, p.window + 1, dtype=np.int64)
-                        tgt = src[:, None] + offs
-                        ok = (tgt >= lo[src][:, None]) & (tgt < hi[src][:, None])
-                        okf = ok.ravel()
-                        expanded.append(
-                            (tgt.ravel()[okf], (val[:, None] + offs).ravel()[okf])
-                        )
+                        expanded.append(_window_events(
+                            np.repeat(st2, l2), vals_flat[gather], p.window, lo, hi
+                        ))
                     pins = starts[(hp_ent[u_sel] != -2) & ~filled[starts]]
                     if len(pins):
                         local[pins] = 0.0
@@ -725,19 +528,42 @@ class FastFeaturizer:
                             local_ent[j2, btype] = ent_v
                             filled[j2] = True
                 if base_pos:
-                    # window expansion: each base event contributes
-                    # (target, val + target - src) over the clipped window —
-                    # contiguous per event, so a stable sort by target
-                    # reproduces the per-sentence apply order per token
-                    src = np.array(base_pos, dtype=np.int64)
-                    val = np.array(base_val, dtype=np.int64)
-                    offs = np.arange(-p.window, p.window + 1, dtype=np.int64)
-                    tgt = src[:, None] + offs
-                    ok = (tgt >= lo[src][:, None]) & (tgt < hi[src][:, None])
-                    okf = ok.ravel()
-                    expanded.append(
-                        (tgt.ravel()[okf], (val[:, None] + offs).ravel()[okf])
-                    )
+                    expanded.append(_window_events(base_pos, base_val, p.window, lo, hi))
+            elif isinstance(p, T.Gazetteers):
+                # deprecated raw-lemma prefix map: soft events only, no pins,
+                # emitted in Gazetteers.process_sentence's apply order (no
+                # dedup). The raw lemma is part of the factorized token key
+                if not any_fresh:
+                    continue
+                raws = [key[1] if isinstance(key, tuple) else key for key in uniques]
+                pmap, info = p.map, p.info
+                first = np.array([pmap.get(r, -1) for r in raws], dtype=np.int64)[codes]
+                span = 2 * p.window + 1
+                G = p.G * span
+                base_pos = []
+                base_val = []
+                for i0 in np.flatnonzero((first >= 0) & fresh_mask):
+                    i = int(i0)
+                    idx = int(first[i])
+                    for f in info[idx]["features"]:
+                        base_pos += (i, i)
+                        base_val += (f + G, f + p.U * span)
+                    j = i + 1
+                    end = int(hi[i])
+                    buffer = raws[codes[i]]
+                    while info[idx]["prefix_of_longer"] and j < end:
+                        buffer = buffer + " " + raws[codes[j]]
+                        idx = pmap.get(buffer)
+                        if idx is None:
+                            break
+                        for f in info[idx]["features"]:
+                            for g in range(i, j + 1):
+                                btype = p.B if g == i else p.L if g == j else p.I
+                                base_pos += (g, g)
+                                base_val += (f + G, f + btype * span)
+                        j += 1
+                if base_pos:
+                    expanded.append(_window_events(base_pos, base_val, p.window, lo, hi))
 
         parts = soft_parts + expanded
         if parts:
@@ -801,7 +627,6 @@ class FastFeaturizer:
                     fill_rows[f0:f1] if f1 > f0 else None,
                     fill_ents[f0:f1] if f1 > f0 else None,
                 )
-                s._soft_events = soft
                 s._pins_memo = memo
                 shared = getattr(s, "_shared_memo", None)
                 if shared is not None:
@@ -967,19 +792,16 @@ class StagePartialScorer:
             self._ps_tab = tab
         return tab
 
-    def score(self, sentences, batch, prev_b=None, prev_e=None, soft_flat=None):
-        """-> softmax probabilities (total_tokens, n_out) for all sentences.
-
-        Expects pin effects to have been computed: either per-sentence
-        (apply_pins, soft features in sent._soft_events) or batched
-        (pins_batch, soft features passed as the position-sorted flat
-        soft_flat=(pos, fid) pair). Pinned rows are still scored (cheap) and
-        the caller overwrites them, same as the slow path.
+    def score(self, batch, soft_flat, prev_b=None, prev_e=None):
+        """-> softmax probabilities (total_tokens, n_out) for the batch.
 
         batch: (codes, uniques, sent_start, lo, hi) precomputed by the
         caller and shared across stages (token keys and sentence bounds are
-        stage-invariant). prev_b/prev_e: flat previous-stage decode arrays
-        (every token known); None on the first stage."""
+        stage-invariant). soft_flat: gazetteer soft features from
+        FastFeaturizer.pins_batch as the position-sorted (pos, fid) pair.
+        Pinned rows are still scored (cheap) and the caller overwrites them,
+        as the reference does. prev_b/prev_e: flat previous-stage decode
+        arrays (every token known); None on the first stage."""
         net = self.net
         n_out = net.n_out
         m = self.maxw
@@ -995,34 +817,20 @@ class StagePartialScorer:
         efid_arrs = []
         ps_proc = self.fz.stateful[0] if self.fz.stateful else None
 
-        if soft_flat is not None:
-            if len(soft_flat[0]):
-                epos_arrs.append(soft_flat[0])
-                efid_arrs.append(soft_flat[1])
-            # outer-word events grouped by sentence length: same pattern per
-            # length, offset by each sentence's base (events of different
-            # sentences never share a bin, so per-bin order is preserved)
-            sbases = sent_start[:-1]
-            for Tn in np.unique(lengths):
-                opos, oval = self.fz._outer_pattern(int(Tn))
-                if not len(opos):
-                    continue
-                bs = sbases[lengths == Tn]
-                epos_arrs.append((bs[:, None] + opos[None, :]).ravel())
-                efid_arrs.append(np.tile(oval, len(bs)))
-        else:
-            base = 0
-            for s in sentences:
-                Tn = s.size
-                soft = getattr(s, "_soft_events", None)
-                if soft is not None:
-                    epos_arrs.append(soft[0] + base)
-                    efid_arrs.append(soft[1])
-                opos, oval = self.fz._outer_pattern(Tn)
-                if len(opos):
-                    epos_arrs.append(opos + base)
-                    efid_arrs.append(oval)
-                base += Tn
+        if len(soft_flat[0]):
+            epos_arrs.append(soft_flat[0])
+            efid_arrs.append(soft_flat[1])
+        # outer-word events grouped by sentence length: same pattern per
+        # length, offset by each sentence's base (events of different
+        # sentences never share a bin, so per-bin order is preserved)
+        sbases = sent_start[:-1]
+        for Tn in np.unique(lengths):
+            opos, oval = self.fz._outer_pattern(int(Tn))
+            if not len(opos):
+                continue
+            bs = sbases[lengths == Tn]
+            epos_arrs.append((bs[:, None] + opos[None, :]).ravel())
+            efid_arrs.append(np.tile(oval, len(bs)))
 
         if prev_b is not None and ps_proc is not None and total:
             tab = self._ps_table(ps_proc)

@@ -63,84 +63,19 @@ def tokenize_df(df: DataFrame, text_col: str = "text", lang: str = "en") -> Data
 
 
 class _BatchRecognizer:
-    """Executor-side batch NER: featurize per sentence, classify all tokens
-    of the batch in ONE matmul per stage, decode per sentence.
+    """Executor-side batch NER over flat batch arrays: factorize the token
+    keys once, compute the stage-invariant pin effects once
+    (FastFeaturizer.pins_batch), score every token of the batch in one
+    StagePartialScorer.score call per stage, decode all sentences with one
+    batched Viterbi per stage. Results equal NerModel.recognize_sentence,
+    the per-sentence reference loop (parity-tested)."""
 
-    use_fast=True routes featurization through ner.fast.FastFeaturizer (the
-    vectorized physical plan); False uses the reference-shaped slow path in
-    features.templates. Both produce identical results (parity-tested)."""
+    def __init__(self, model):
+        from .fast import FastFeaturizer, StagePartialScorer
 
-    def __init__(self, model, use_fast: bool = True):
         self.model = model
-        self.use_fast = use_fast
-        if use_fast:
-            from .fast import FastFeaturizer, StagePartialScorer
-
-            self.fast = FastFeaturizer(model)
-            if not self.fast.supported:
-                self.use_fast = use_fast = False  # unknown processor -> slow path
-            else:
-                self.scorers = [StagePartialScorer(self.fast, net) for net in model.networks]
-
-    def _stage_fast(self, live, scorer, batch, prev_b, prev_e):
-        """One stage over the whole batch with FLAT arrays: every sentence's
-        local/local_ent/local_filled are numpy VIEWS into batch-wide arrays,
-        so pins write through and there is no per-sentence copy-back.
-        Returns (local, local_ent) flat (total, 5) arrays."""
-        _codes, _uniques, sent_start, _lo, _hi = batch
-        total = int(sent_start[-1])
-        local = np.zeros((total, 5), dtype=np.float64)
-        local_ent = np.full((total, 5), T_ENTITY_UNKNOWN, dtype=np.int64)
-        filled = np.zeros(total, dtype=bool)
-        has_complex = bool(self.fast.pin_procs)
-        for k, s in enumerate(live):
-            a = sent_start[k]
-            b = sent_start[k + 1]
-            s.local = local[a:b]
-            s.local_ent = local_ent[a:b]
-            s.local_filled = filled[a:b]
-            # gazetteer soft-feature appends land here on the FIRST stage
-            # only (later stages replay the _pins_memo snapshot)
-            s.features = (
-                [[] for _ in range(s.size)]
-                if has_complex and getattr(s, "_pins_memo", None) is None
-                else None
-            )
-            self.fast.apply_pins(s)
-        probs = scorer.score(live, batch=batch, prev_b=prev_b, prev_e=prev_e)
-        local_all, ent_all = core.fill_bilou_probabilities(probs)
-        if filled.any():
-            keep = ~filled
-            local[keep] = local_all[keep]
-            local_ent[keep] = ent_all[keep]
-        else:
-            local = local_all
-            local_ent = ent_all
-        filled[:] = True
-        return local, local_ent
-
-    def _stage_slow(self, live, net):
-        pending = []
-        for s in live:
-            s.clear_probabilities_local_filled()
-            self.model.templates.process_sentence(s)
-            for i in range(s.size):
-                if not s.local_filled[i]:
-                    pending.append((s, i))
-        if pending:
-            flat = []
-            ptr = [0]
-            for s, i in pending:
-                flat.extend(s.features[i])
-                ptr.append(len(flat))
-            probs = net.scores_batch(
-                np.asarray(flat, dtype=np.int64), np.asarray(ptr, dtype=np.int64)
-            )
-            local, ent = core.fill_bilou_probabilities(probs)
-            for r, (s, i) in enumerate(pending):
-                s.local[i] = local[r]
-                s.local_ent[i] = ent[r]
-                s.local_filled[i] = True
+        self.fast = FastFeaturizer(model)
+        self.scorers = [StagePartialScorer(self.fast, net) for net in model.networks]
 
     # cap tokens per internal batch: bounds featurizer transients (each
     # token expands to ~50-100 events; 150k tokens ~= 10-15M event rows)
@@ -168,113 +103,58 @@ class _BatchRecognizer:
             if cur:
                 results.extend(self.recognize_batch(cur))
             return results
-        model = self.model
         live = [s for s in sentences if s.size > 0]
-        if not self.use_fast:
-            # slow path reads per-sentence prev_bilou/prev_ent during stage 0
-            # (PreviousStage.process_sentence); fast scorers take the flat
-            # arrays instead, so fresh lists would be dead allocations
-            for s in live:
-                s.clear_previous_stage()
-        last_best = {}
-        # tagged sentences (external analyses or a model morpho tagger,
-        # trained or not) stay on the fast path: the featurizer keys its
-        # caches on the full (form, raw_lemma, lemma_id, tag, comments)
-        # tuple, so per-token morphology is represented exactly
-        use_fast = self.use_fast
-        if use_fast and live:
-            import pandas as pd
+        if not live:
+            return [[] for _ in sentences]
+        fast = self.fast
+        # stage-invariant batch geometry + factorized token keys, computed
+        # ONCE and shared by every stage's scorer. Tagged sentences key on
+        # the full (form, raw_lemma, lemma_id, tag, comments) tuple, so
+        # per-token morphology is represented exactly
+        lengths = np.array([s.size for s in live], dtype=np.int64)
+        sent_start = np.zeros(len(live) + 1, dtype=np.int64)
+        np.cumsum(lengths, out=sent_start[1:])
+        forms_all = []
+        for s in live:
+            forms_all.extend(fast._token_keys(s))
+        keys_arr = np.empty(len(forms_all), dtype=object)
+        keys_arr[:] = forms_all
+        codes, uniques = pd.factorize(keys_arr)
+        tok_sent = np.repeat(np.arange(len(live), dtype=np.int64), lengths)
+        lo = sent_start[:-1][tok_sent]
+        hi = sent_start[1:][tok_sent]
+        batch = (codes, uniques, sent_start, lo, hi)
 
-            # stage-invariant batch geometry + factorized token keys,
-            # computed ONCE and shared by every stage's scorer
-            lengths = np.array([s.size for s in live], dtype=np.int64)
-            sent_start = np.zeros(len(live) + 1, dtype=np.int64)
-            np.cumsum(lengths, out=sent_start[1:])
-            tot = int(sent_start[-1])
-            forms_all = []
-            for s in live:
-                forms_all.extend(self.fast._token_keys(s))
-            keys_arr = np.empty(len(forms_all), dtype=object)
-            keys_arr[:] = forms_all
-            codes, uniques = pd.factorize(keys_arr)
-            tok_sent = np.repeat(np.arange(len(live), dtype=np.int64), lengths)
-            lo = sent_start[:-1][tok_sent]
-            hi = sent_start[1:][tok_sent]
-            batch = (codes, uniques, sent_start, lo, hi)
+        # pin effects are stage-invariant: computed ONCE over flat arrays
+        # (dead tokens skipped via the factorized key tables) and scattered
+        # over each stage's scored output
+        if fast.pin_procs:
+            soft_pos, soft_fid, fill_idx, fill_rows, fill_ents = fast.pins_batch(live, batch)
+        else:
+            soft_pos = soft_fid = fill_idx = np.empty(0, dtype=np.int64)
+            fill_rows = fill_ents = None
+        best_cat = bent_cat = None
+        for scorer in self.scorers:
+            probs = scorer.score(batch, (soft_pos, soft_fid), prev_b=best_cat, prev_e=bent_cat)
+            local, local_ent = core.fill_bilou_probabilities(probs)
+            if len(fill_idx):
+                local[fill_idx] = fill_rows
+                local_ent[fill_idx] = fill_ents
+            best_cat, bent_cat = core.viterbi_decode_batch(local, local_ent, lengths)
 
-            best_cat = bent_cat = None
-            if self.fast.batch_pins_ok:
-                # fully-batched pin path: pin effects are stage-invariant,
-                # computed ONCE over flat arrays (dead tokens skipped via the
-                # factorized key tables) and scattered over each stage's
-                # scored output — no per-sentence view setup at all
-                if self.fast.pin_procs:
-                    soft_pos, soft_fid, fill_idx, fill_rows, fill_ents = (
-                        self.fast.pins_batch(live, batch)
-                    )
-                else:
-                    soft_pos = soft_fid = fill_idx = np.empty(0, dtype=np.int64)
-                    fill_rows = fill_ents = None
-                for stage, net in enumerate(model.networks):
-                    probs = self.scorers[stage].score(
-                        live, batch=batch, prev_b=best_cat, prev_e=bent_cat,
-                        soft_flat=(soft_pos, soft_fid),
-                    )
-                    local, local_ent = core.fill_bilou_probabilities(probs)
-                    if len(fill_idx):
-                        local[fill_idx] = fill_rows
-                        local_ent[fill_idx] = fill_ents
-                    best_cat, bent_cat = core.viterbi_decode_batch(local, local_ent, lengths)
-            else:
-                for stage, net in enumerate(model.networks):
-                    local, local_ent = self._stage_fast(
-                        live, self.scorers[stage], batch, best_cat, bent_cat
-                    )
-                    best_cat, bent_cat = core.viterbi_decode_batch(local, local_ent, lengths)
-            for k, s in enumerate(live):
-                a, b = sent_start[k], sent_start[k + 1]
-                best = best_cat[a:b]
-                best_ent = bent_cat[a:b]
-                # numpy views: list-like for any downstream reader
-                s.prev_bilou = best
-                s.prev_ent = best_ent
-                last_best[id(s)] = (best, best_ent)
-        elif not use_fast:
-            for stage, net in enumerate(model.networks):
-                self._stage_slow(live, net)
-                for s in live:
-                    best, best_ent = core.viterbi_decode(s.local, s.local_ent)
-                    s.prev_bilou = [int(b) for b in best]
-                    s.prev_ent = [int(e) for e in best_ent]
-                    last_best[id(s)] = (best, best_ent)
-
-        results = []
+        # one flat pass over B/U candidates instead of per-sentence scans
+        spans_per = iter(core.extract_entities_batch(best_cat, bent_cat, sent_start))
         name = self.model.entities.name
         templates = self.model.templates
         entities = self.model.entities
-        if use_fast and live:
-            # one flat pass over B/U candidates instead of per-sentence scans
-            spans_per = core.extract_entities_batch(best_cat, bent_cat, sent_start)
-            li = 0
-            for s in sentences:
-                if s.size == 0:
-                    results.append([])
-                    continue
-                spans = spans_per[li]
-                li += 1
-                ents = [[st, ln, name(e)] for (st, ln, e) in spans]
-                templates.process_entities(s, ents, entities)
-                results.append(core.sort_entities([tuple(e) for e in ents]))
-        else:
-            for s in sentences:
-                if s.size == 0:
-                    results.append([])
-                    continue
-                best, best_ent = last_best[id(s)]
-                spans = core.extract_entities(best, best_ent)
-                ents = [[st, ln, name(e)] for (st, ln, e) in spans]
-                templates.process_entities(s, ents, entities)
-                results.append(core.sort_entities([tuple(e) for e in ents]))
+        results = []
+        for s in sentences:
+            if s.size == 0:
+                results.append([])
+                continue
+            ents = [[st, ln, name(e)] for (st, ln, e) in next(spans_per)]
+            templates.process_entities(s, ents, entities)
+            results.append(core.sort_entities([tuple(e) for e in ents]))
         return results
 
 
@@ -302,7 +182,6 @@ def recognize_df(
     mapInPandas).
     """
     from ..model.model import NerModel
-    from ..features.templates import Sentence
 
     _cache = {}
     passthrough = tuple(passthrough)
@@ -377,8 +256,6 @@ def recognize_local(model, texts, lang: str | None = None):
     """Single-process oracle: same kernels, no Spark — used for parity tests
     (FIXTURES.md §6). Returns list of per-text mention dicts. lang=None
     selects the model-implied tokenizer (see recognize_df)."""
-    from ..features.templates import Sentence
-
     lang = lang or model.default_tokenizer_lang
     rec = _BatchRecognizer(model)
     out = []

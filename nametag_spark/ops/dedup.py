@@ -10,6 +10,7 @@ the table size.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from .text import hash64, spread_small_input, tokens_col
 
@@ -160,13 +161,13 @@ def with_simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text", 
     import numpy as np
     import pandas as pd
 
-    df = spread_small_input(df)
+    # an existing simhash column is replaced; a StructType (not a DDL
+    # string) keeps names that need quoting intact
+    df = spread_small_input(df.drop("simhash"))
     split_re = re.compile("[ \t\n\x0b\x0c\r]+")  # Java \s (ASCII), not Python \s
     shifts = np.arange(bits, dtype=np.int64)
     weights = (np.int64(1) << shifts)
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-    ) + ", simhash bigint"
+    schema = StructType(df.schema.fields + [StructField("simhash", LongType())])
 
     def kernel(batches):
         import hashlib

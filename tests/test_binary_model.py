@@ -54,6 +54,17 @@ def test_binary_decode_matches_reference_output():
         assert m.recognize_sentence(sent) == gold, sent
 
 
+def test_binary_batched_plan_matches_reference_output():
+    """The batched plan (plain Gazetteers, GazetteersEnhanced and URL pins
+    included) reproduces run_ner, as one batch and one sentence a call."""
+    from nametag_spark.ner.pipeline import _BatchRecognizer
+
+    m = load_binary_ner(FIXTURE)
+    rec = _BatchRecognizer(m)
+    assert rec.recognize_batch([m.make_sentence(s) for s in SENTENCES]) == REF_GOLD
+    assert [rec.recognize_batch([m.make_sentence(s)])[0] for s in SENTENCES] == REF_GOLD
+
+
 def test_binary_roundtrip_through_npz_dir(tmp_path):
     """binary -> our dir format -> reload -> identical decisions."""
     m = load_binary_ner(FIXTURE)

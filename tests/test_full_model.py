@@ -103,11 +103,9 @@ def test_full_model_fast_slow_parity(full_model_dir):
                 out.append(Sentence([t[a : a + b] for (a, b) in s]))
         return out
 
-    fast = _BatchRecognizer(model, use_fast=True)
-    assert fast.use_fast, "full template set should be fast-path supported"
-    r_fast = fast.recognize_batch(build())
-    r_slow = _BatchRecognizer(model, use_fast=False).recognize_batch(build())
-    assert r_fast == r_slow
+    r_fast = _BatchRecognizer(model).recognize_batch(build())
+    r_ref = [model.recognize_sentence(s.forms) for s in build()]
+    assert r_fast == r_ref
 
 
 def test_hard_pre_forces_entity(full_model_dir):
@@ -203,35 +201,105 @@ def test_deprecated_gazetteers_processor(tmp_path):
     assert (b3 + proc.L * span) in s.features[4]
 
 
-def test_deprecated_gazetteers_in_model(tmp_path):
-    """Trains end-to-end with the deprecated template + fast/slow parity."""
-    from nametag_spark.data.synth import gold_to_conll, synth_transcripts
-    from nametag_spark.features.templates import Sentence
-    from nametag_spark.ner.pipeline import _BatchRecognizer
-    from nametag_spark.tokenizer.rules import tokenize_sentences
-    from nametag_spark.train.trainer import train_ner
+def _pin_soft_events(model, forms):
+    """(pos, fid) soft events of one sentence twice over: from the batched
+    plan's FastFeaturizer.pins_batch, and from the reference processors'
+    process_sentence appends, in order."""
+    import numpy as np
+    import pandas as pd
 
-    (tmp_path / "locs.txt").write_text("Prague\nBerlin\nLondon\n", encoding="utf-8")
+    from nametag_spark.ner.fast import FastFeaturizer
+
+    fz = FastFeaturizer(model)
+    sent = model.make_sentence(forms)
+    n = sent.size
+    keys = np.empty(n, dtype=object)
+    keys[:] = fz._token_keys(sent)
+    codes, uniques = pd.factorize(keys)
+    batch = (codes, uniques, np.array([0, n]), np.zeros(n, dtype=np.int64), np.full(n, n, dtype=np.int64))
+    soft_pos, soft_fid = fz.pins_batch([sent], batch)[:2]
+
+    ref = model.make_sentence(forms)
+    ref.clear_probabilities_local_filled()
+    ref.features = [[] for _ in range(n)]
+    for p in fz.pin_procs:
+        p.process_sentence(ref)
+    expected = [(i, f) for i, fl in enumerate(ref.features) for f in fl]
+    return list(zip(soft_pos.tolist(), soft_fid.tolist())), expected
+
+
+def _batch_equals_reference(model, forms_lists):
+    """Batched decisions equal recognize_sentence on every sentence, and a
+    second pass over the same Sentence objects (replaying their pin memos)
+    returns the same result."""
+    rec = _BatchRecognizer(model)
+    sents = [model.make_sentence(f) for f in forms_lists]
+    first = rec.recognize_batch(sents)
+    assert first == [model.recognize_sentence(f) for f in forms_lists]
+    assert any(getattr(s, "_pins_memo", None) is not None for s in sents)
+    assert rec.recognize_batch(sents) == first
+
+
+def test_deprecated_gazetteers_in_model(tmp_path):
+    """Deprecated plain Gazetteers on the batched plan: two processors over
+    multi-word, shared-prefix entries (one entry in two list files) beside
+    URLEmailDetector. Soft events equal the reference processors' and
+    decisions equal recognize_sentence."""
+    from nametag_spark.tokenizer.rules import tokenize_sentences
+
+    (tmp_path / "locs.txt").write_text(
+        "Prague\nBerlin\nLondon\nNew York\nNew York City\n", encoding="utf-8"
+    )
+    (tmp_path / "orgs.txt").write_text("Acme Corp\nNew York Times\nLondon\n", encoding="utf-8")
     tdf, gdf = synth_transcripts(n_conversations=15, seed=1)
     model = train_ner(
-        "Form/2\nFormCapitalization/2\nGazetteers/2 locs.txt\nPreviousStage/2",
+        "Form/2\nFormCapitalization/2\nURLEmailDetector/1 URL EMAIL\n"
+        "Gazetteers/2 locs.txt orgs.txt\nGazetteers/1 orgs.txt locs.txt\nPreviousStage/2",
         gold_to_conll(tdf, gdf),
         stages=2,
         params={"iterations": 4},
         base_dir=str(tmp_path),
     )
-    texts = list(synth_transcripts(n_conversations=5, seed=9)[0]["text"])
+    texts = list(synth_transcripts(n_conversations=5, seed=9)[0]["text"]) + [
+        "She moved to New York City last year .",
+        "The New York Times wrote about London and New York .",
+        "Mail bob@acme.com about Acme Corp in New York City",
+    ]
+    forms_lists = [[t[a : a + b] for (a, b) in s] for t in texts for s in tokenize_sentences(t)]
 
-    def build():
-        out = []
-        for t in texts:
-            for s in tokenize_sentences(t):
-                out.append(Sentence([t[a : a + b] for (a, b) in s]))
-        return out
+    got, expected = _pin_soft_events(model, "She moved to New York City last year .".split())
+    assert got and got == expected
+    _batch_equals_reference(model, forms_lists)
 
-    rf = _BatchRecognizer(model, use_fast=True).recognize_batch(build())
-    rs = _BatchRecognizer(model, use_fast=False).recognize_batch(build())
-    assert rf == rs
+
+def test_deprecated_gazetteers_match_raw_lemmas(tmp_path):
+    """Plain Gazetteers match raw lemmas: under a morpho tagger the batched
+    plan reads them off the factorized (form, raw_lemma, ...) token keys."""
+    from nametag_spark.morpho.dictionary import Morpho, MorphoDictionary, SuffixRuleGuesser
+    from nametag_spark.morpho.tagger import MorphoTagger, PerceptronTagger
+
+    d = MorphoDictionary.from_forms([("Prahy", "Praha", "NNP"), ("Yorku", "York", "NNP")])
+    mt = MorphoTagger(Morpho(d, SuffixRuleGuesser(), "UNK"), PerceptronTagger())
+    (tmp_path / "locs.txt").write_text("Praha\nNew York\n", encoding="utf-8")
+    conll = "\n\n".join(
+        [
+            "Alice\tB-PER\nflew\tO\nto\tO\nPrahy\tB-LOC\n.\tO",
+            "Bob\tB-PER\nsaw\tO\nNew\tB-LOC\nYorku\tI-LOC\n.\tO",
+        ]
+        * 4
+    )
+    model = train_ner(
+        "Form/1\nGazetteers/1 locs.txt\nPreviousStage/1", conll, stages=2,
+        params={"iterations": 4}, tagger=mt, base_dir=str(tmp_path),
+    )
+    forms = ["Eve", "left", "Prahy", "for", "New", "Yorku", "."]
+    sent = model.make_sentence(forms)
+    assert sent.get_raw_lemmas()[2] == "Praha" and sent.get_raw_lemmas()[5] == "York"
+
+    got, expected = _pin_soft_events(model, forms)
+    assert {p for p, _ in got} >= {2, 4, 5}
+    assert got == expected
+    _batch_equals_reference(model, [forms, ["Praha", "and", "Prahy", "."], ["Yorku", "alone"]])
 
 
 def test_pdt_lemma_split_and_lemma_term():

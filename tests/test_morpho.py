@@ -289,8 +289,8 @@ def test_czech_full_stack_generalization():
 
 
 def test_fast_slow_parity_with_context_free_tagger():
-    """The vectorized fast path must equal the reference-shaped slow path
-    when a context-free (zero-weight) morpho tagger is attached — RawLemma*/
+    """The batched plan must equal NerModel.recognize_sentence when a
+    context-free (zero-weight) morpho tagger is attached — RawLemma*/
     Lemma/Tag/CzechLemmaTerm features are live and per-form memoizable."""
     from nametag_spark.morpho.dictionary import Morpho, MorphoDictionary, SuffixRuleGuesser
     from nametag_spark.ner.pipeline import _BatchRecognizer
@@ -315,9 +315,7 @@ def test_fast_slow_parity_with_context_free_tagger():
     )
     model = train_ner(templates, conll, stages=2, params={"iterations": 6}, tagger=mt)
 
-    fast = _BatchRecognizer(model, use_fast=True)
-    slow = _BatchRecognizer(model, use_fast=False)
-    assert fast.use_fast, "context-free tagger must stay on the fast path"
+    fast = _BatchRecognizer(model)
 
     texts = [
         ["Alice", "visited", "Praha", "."],
@@ -327,15 +325,15 @@ def test_fast_slow_parity_with_context_free_tagger():
     ]
     for forms in texts:
         a = fast.recognize_batch([model.make_sentence(forms)])
-        b = slow.recognize_batch([model.make_sentence(forms)])
+        b = [model.recognize_sentence(forms)]
         assert a == b, (forms, a, b)
 
 
 def test_trained_tagger_stays_fast_with_parity():
-    """A TRAINED (context-dependent) tagger also runs on the fast path —
+    """A TRAINED (context-dependent) tagger also runs on the batched plan —
     the featurizer keys its caches on the full morpho tuple, so the same
-    form under different tags memoizes separately. Decisions must equal the
-    slow path on context-disambiguated sentences."""
+    form under different tags memoizes separately. Decisions must equal
+    recognize_sentence on context-disambiguated sentences."""
     from nametag_spark.ner.pipeline import _BatchRecognizer
     from nametag_spark.train.trainer import train_ner
 
@@ -344,12 +342,10 @@ def test_trained_tagger_stays_fast_with_parity():
         ["pani\tO\npila\tB-PER", "vcera\tO\npila\tO\nvodu\tO"] * 4
     )
     model = train_ner("Tag/0\nLemma/0\n", conll, stages=1, params={"iterations": 8}, tagger=mt)
-    fast = _BatchRecognizer(model, use_fast=True)
-    assert fast.use_fast
-    slow = _BatchRecognizer(model, use_fast=False)
+    fast = _BatchRecognizer(model)
     for forms in (["pani", "pila"], ["vcera", "pila", "vodu"], ["pila", "vodu"]):
         a = fast.recognize_batch([model.make_sentence(forms)])
-        b = slow.recognize_batch([model.make_sentence(forms)])
+        b = [model.recognize_sentence(forms)]
         assert a == b, (forms, a, b)
-    # the context split itself still decodes correctly on the fast path
+    # the context split itself still decodes correctly on the batched plan
     assert fast.recognize_batch([model.make_sentence(["pani", "pila"])]) == [[(1, 1, "PER")]]

@@ -318,6 +318,27 @@ def test_simhash_matches_explode_reference(spark):
         assert a == b
 
 
+def test_simhash_rerun_replaces_its_column(spark):
+    """Re-running with_simhash on its own output replaces the simhash
+    column instead of adding a second one."""
+    from nametag_spark.ops.dedup import with_simhash
+
+    df = spark.createDataFrame([(1, "alpha beta gamma"), (2, "zz yy xx")], ["doc_id", "text"])
+    once = with_simhash(df)
+    twice = with_simhash(once)
+    assert twice.columns == ["doc_id", "text", "simhash"]
+    assert sorted(map(tuple, twice.collect())) == sorted(map(tuple, once.collect()))
+
+
+def test_simhash_keeps_names_that_need_quoting(spark):
+    from nametag_spark.ops.dedup import with_simhash
+
+    df = spark.createDataFrame([(1, "alpha beta", "a"), (2, "zz yy", "b")], ["doc_id", "text", "my col"])
+    out = with_simhash(df)
+    assert out.columns == ["doc_id", "text", "my col", "simhash"]
+    assert sorted(r["my col"] for r in out.collect()) == ["a", "b"]
+
+
 def test_cosine_topk_bit_exact_vs_jvm_fold(spark, embeddings):
     """cosine_topk now scores in an Arrow/numpy kernel; its accumulation
     order must reproduce the JVM aggregate/zip_with left fold BIT-exactly

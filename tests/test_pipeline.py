@@ -77,7 +77,7 @@ def test_model_save_load_roundtrip(tiny_model_dir, tmp_path):
 
 def test_hidden_layer_model(tmp_path):
     """Optional sigmoid hidden layer (network_classifier.cpp:189-209,
-    backprop :229-258): train, save/load, fast/slow parity, P/R on gold."""
+    backprop :229-258): train, save/load, batched/reference parity, P/R on gold."""
     from nametag_spark.data.synth import gold_to_conll, synth_transcripts
     from nametag_spark.features.templates import Sentence
     from nametag_spark.ner.pipeline import _BatchRecognizer
@@ -106,8 +106,8 @@ def test_hidden_layer_model(tmp_path):
                 res.append(Sentence([t[a : a + b] for (a, b) in s]))
         return res
 
-    rf = _BatchRecognizer(m2, use_fast=True).recognize_batch(build())
-    rs = _BatchRecognizer(m2, use_fast=False).recognize_batch(build())
+    rf = _BatchRecognizer(m2).recognize_batch(build())
+    rs = [m2.recognize_sentence(s.forms) for s in build()]
     assert rf == rs
 
     pred = set()
@@ -124,8 +124,9 @@ def test_hidden_layer_model(tmp_path):
 
 def test_external_tagger_sentences():
     """External analyses ('form raw_lemma tag', external_tagger.cpp:32-63)
-    flow through the RawLemma*/Lemma/Tag templates and route to the slow
-    path; trivial-tagger behavior is unchanged."""
+    flow through the RawLemma*/Lemma/Tag templates on the batched plan,
+    keyed on the full morphology tuple; trivial-tagger behavior is
+    unchanged."""
     from nametag_spark.data.synth import gold_to_conll, synth_transcripts
     from nametag_spark.features.templates import Sentence
     from nametag_spark.ner.pipeline import _BatchRecognizer
@@ -145,7 +146,7 @@ def test_external_tagger_sentences():
     assert s_ext.get_raw_lemmas() == ["Alice", "Johnson", "work"]
     assert s_ext.get_tags() == ["NNP", "NNP", "VBZ"]
     out = rec.recognize_batch([s_ext])
-    assert isinstance(out[0], list)  # runs end-to-end via the slow path
+    assert isinstance(out[0], list)  # runs end-to-end on the batched plan
 
     # identical analyses == trivial tagger -> identical result
     s_triv = Sentence(["Alice", "Johnson", "works"])

@@ -1,9 +1,10 @@
 """Stale-import guard for the entry points no tier-1 test runs: every name
-that scripts/*.py, perfbench/*.py, bench.py and bench_extra.py import from
-nametag_spark, and every attribute they read off an imported nametag_spark
-module, must still exist, and every call of an imported nametag_spark
-function must still bind to its signature. Parses the files with ast (read
-only); no Spark session."""
+that scripts/*.py, perfbench/*.py, bench.py, bench_extra.py and
+eval_report.py import from nametag_spark, and every attribute they read off
+an imported nametag_spark module, must still exist, and every call of an
+imported nametag_spark function or class must still bind to its signature
+(a class's constructor). Parses the files with ast (read only); no Spark
+session."""
 
 import ast
 import glob
@@ -18,7 +19,7 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 FILES = sorted(
     glob.glob(os.path.join(ROOT, "scripts", "**", "*.py"), recursive=True)
     + glob.glob(os.path.join(ROOT, "perfbench", "*.py"))
-    + [os.path.join(ROOT, "bench.py"), os.path.join(ROOT, "bench_extra.py")]
+    + [os.path.join(ROOT, f) for f in ("bench.py", "bench_extra.py", "eval_report.py")]
 )
 
 
@@ -52,7 +53,7 @@ def _stale_names(path: str) -> list:
         tree = ast.parse(f.read(), filename=path)
     stale = []
     modules = {}  # local name -> the nametag_spark module bound to it
-    functions = {}  # local name -> the nametag_spark function bound to it
+    callables = {}  # local name -> the nametag_spark function or class bound to it
     for node in ast.walk(tree):
         if isinstance(node, ast.ImportFrom) and (node.module or "").startswith("nametag_spark"):
             for a in node.names:
@@ -61,8 +62,10 @@ def _stale_names(path: str) -> list:
                     stale.append(f"{node.lineno}: from {node.module} import {a.name}")
                 elif isinstance(obj, types.ModuleType):
                     modules[a.asname or a.name] = obj
-                elif inspect.isfunction(obj):
-                    functions[a.asname or a.name] = obj
+                elif inspect.isfunction(obj) or (
+                    inspect.isclass(obj) and obj.__module__.startswith("nametag_spark")
+                ):
+                    callables[a.asname or a.name] = obj
         elif isinstance(node, ast.Import):
             for a in node.names:
                 if a.name.startswith("nametag_spark") and a.asname:
@@ -78,8 +81,8 @@ def _stale_names(path: str) -> list:
         elif (
             isinstance(node, ast.Call)
             and isinstance(node.func, ast.Name)
-            and node.func.id in functions
-            and not _binds(functions[node.func.id], node)
+            and node.func.id in callables
+            and not _binds(callables[node.func.id], node)
         ):
             stale.append(f"{node.lineno}: call of {node.func.id}")
     return stale
@@ -87,13 +90,15 @@ def _stale_names(path: str) -> list:
 
 def test_guard_covers_the_entry_points():
     names = {os.path.relpath(f, ROOT) for f in FILES}
-    assert {"bench.py", "bench_extra.py", "perfbench/run.py"} <= names
+    assert {"bench.py", "bench_extra.py", "eval_report.py", "perfbench/run.py"} <= names
     assert any(n.startswith("scripts/") for n in names)
 
 
-def test_guard_checks_call_signatures():
-    """A call that no longer binds is reported (checked on a parsed snippet)."""
+def test_guard_checks_call_signatures(tmp_path):
+    """A call that no longer binds is reported (checked on parsed snippets),
+    for functions and for class constructors."""
     from nametag_spark.kg.graph_io import run_stage
+    from nametag_spark.ner.pipeline import _BatchRecognizer
 
     def call(src):
         return ast.parse(src).body[0].value
@@ -102,6 +107,14 @@ def test_guard_checks_call_signatures():
     assert _binds(run_stage, call("run_stage(*args)"))
     assert not _binds(run_stage, call("run_stage(spark, out, name, fp)"))
     assert not _binds(run_stage, call("run_stage(spark, out, name, fp, build, stage_cols=part)"))
+    assert _binds(_BatchRecognizer, call("_BatchRecognizer(model)"))
+    assert not _binds(_BatchRecognizer, call("_BatchRecognizer(model, use_fast=False)"))
+    script = tmp_path / "stale.py"
+    script.write_text(
+        "from nametag_spark.ner.pipeline import _BatchRecognizer\n"
+        "rec = _BatchRecognizer(model, use_fast=False)\n"
+    )
+    assert _stale_names(str(script)) == ["2: call of _BatchRecognizer"]
 
 
 @pytest.mark.parametrize("path", FILES, ids=lambda p: os.path.relpath(p, ROOT))
