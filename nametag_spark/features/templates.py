@@ -582,7 +582,9 @@ class Gazetteers(FeatureProcessor):
         span = 2 * self.window + 1
         raws = sent.get_raw_lemmas()
         for i in range(sent.size):
-            idx = self.map.get(raws[i])
+            # "" maps to the feature id parse() seeds, not to an entry: no
+            # entry is empty, since parse() drops empty tokens
+            idx = self.map.get(raws[i]) if raws[i] else None
             if idx is None:
                 continue
             for feature in self.info[idx]["features"]:

@@ -19,11 +19,24 @@ must be mounted there (it is already for the manifests). Manifests are
 replaced atomically (temp file + os.replace).
 
 Reads follow the manifest: `read_files` reads exactly the files a stage
-manifest (or, for the incremental mention store, `_batches.json`) lists, with
+manifest (or, for the incremental stores, `_batches.json`) lists, with
 the stored schema, and Spark stats them on the driver instead of listing the
 directory. A file the manifest does not list is never served, so no build
 runs a counting, schema-inference or listing job, and a resumed build
 launches no Spark job at all.
+
+Incremental ingest (`append_mentions`, also the sink of the streaming path)
+keeps an append-only log per ingest batch:
+
+  out_dir/mentions_incremental/ingest_batch=<id>/   the batch's NER mentions
+  out_dir/evidence_incremental/ingest_batch=<id>/   its surface-level triple
+                                                    evidence
+  out_dir/mentions_incremental._batches.json        per batch: rows, files,
+                                                    schema of both
+
+`build_knowledge_graph(incremental=True)` is the view over that log: global
+entity resolution over all mentions, then the stored evidence joined to the
+entity ids and aggregated.
 """
 
 from __future__ import annotations
@@ -58,6 +71,10 @@ def stage_path(out_dir: str, stage: str) -> str:
 
 def _manifest_path(out_dir: str, stage: str) -> str:
     return os.path.join(out_dir, f"{stage}._lineage.json")
+
+
+# the incremental stores append_mentions writes, one directory each
+_STORES = {"mentions": "mentions_incremental", "evidence": "evidence_incremental"}
 
 
 def _batches_path(out_dir: str) -> str:
@@ -214,60 +231,81 @@ def append_mentions(
     batch_id: str,
 ) -> dict:
     """Incremental ingest: NER over ONLY the new turns, appended to the
-    mention store partitioned by ingest batch. The expensive stage (NER)
-    never recomputes old data; downstream stages (resolution, triples) are
-    rebuilt from the full cached mention table by build_knowledge_graph
-    (global entity resolution cannot be incrementally patched without
-    changing its semantics — rebuilding from cached mentions is the honest
-    standard pattern).
+    mention store, and the batch's surface-level triple evidence (pairs of
+    canonical surfaces with the role/tool context of the batch's own turns),
+    appended to the evidence store; both partitioned by ingest batch.
+    Neither is ever recomputed: evidence depends only on a turn's own
+    mentions. Only the entity-id assignment is global, so
+    build_knowledge_graph(incremental=True) re-resolves entities over the
+    whole mention store and joins the ids onto the stored evidence. A turn
+    (conv_id, turn_idx) split across two batches is not paired across them.
 
     Idempotent per batch_id: re-appending an already-ingested batch is a
     no-op (recorded in the batches manifest). A batch counts once the
-    manifest records it with its files; files an earlier, failed append of
-    the same batch_id left behind are deleted before it is written again.
+    manifest records it with its mention and evidence files; files an
+    earlier, failed append of the same batch_id left behind are deleted
+    before it is written again.
     """
     from ..ner.pipeline import recognize_df
+    from .resolution import canonicalize_mentions
+    from .triples import triple_evidence
 
     os.makedirs(out_dir, exist_ok=True)
-    path = stage_path(out_dir, "mentions_incremental")
     manifest_path = _batches_path(out_dir)
     batches = _read_json(manifest_path) if os.path.exists(manifest_path) else {}
     if batch_id in batches:
         return {"batch_id": batch_id, "rows": batches[batch_id]["rows"], "appended": False}
 
-    if os.path.isdir(path):
-        for d in os.listdir(path):
-            if unquote(d) == f"ingest_batch={batch_id}":
-                shutil.rmtree(os.path.join(path, d))
+    paths = {part: stage_path(out_dir, store) for part, store in _STORES.items()}
+    for path in paths.values():
+        if os.path.isdir(path):
+            for d in os.listdir(path):
+                if unquote(d) == f"ingest_batch={batch_id}":
+                    shutil.rmtree(os.path.join(path, d))
 
-    mentions = recognize_df(new_transcripts, model_dir).withColumn(
-        "ingest_batch", F.lit(batch_id)
+    def append(df, path):
+        df = df.withColumn("ingest_batch", F.lit(batch_id))
+        before = set(_data_files(path))
+        df.write.mode("append").partitionBy("ingest_batch").parquet(path)
+        files, rows, schema = _committed(df, path, ["ingest_batch"], before)
+        return {"rows": sum(rows), "files": files, "schema": schema}
+
+    entry = append(recognize_df(new_transcripts, model_dir), paths["mentions"])
+    mentions = read_files(spark, paths["mentions"], entry["files"], entry["schema"])
+    evidence = triple_evidence(
+        canonicalize_mentions(mentions).where(F.length("norm") > 0),
+        new_transcripts.select("conv_id", "turn_idx", "role", "tool"),
+        id_cols=(),
     )
-    before = set(_data_files(path))
-    mentions.write.mode("append").partitionBy("ingest_batch").parquet(path)
-    files, rows, schema = _committed(mentions, path, ["ingest_batch"], before)
-    batches[batch_id] = {
-        "rows": sum(rows), "files": files, "written_at": time.time(), "schema": schema
-    }
+    entry["evidence"] = append(evidence, paths["evidence"])
+    batches[batch_id] = {**entry, "written_at": time.time()}
     _write_json(manifest_path, batches)
     # existence of new mentions invalidates the downstream fingerprint chain
-    return {"batch_id": batch_id, "rows": sum(rows), "appended": True}
+    return {"batch_id": batch_id, "rows": entry["rows"], "appended": True}
+
+
+def _read_store(spark: SparkSession, out_dir: str, part: str) -> DataFrame:
+    """The `part` ("mentions" or "evidence") files of every recorded batch,
+    read with the schema its latest batch recorded."""
+    manifest_path = _batches_path(out_dir)
+    batches = _read_json(manifest_path)
+    entries = {b: m if part == "mentions" else m.get(part, {}) for b, m in batches.items()}
+    unlisted = [b for b, m in entries.items() if "files" not in m]
+    if unlisted:
+        raise ValueError(
+            f"{manifest_path} records no {part} files for batches {unlisted}: re-ingest the "
+            "store (delete its directories and _batches.json, then append_mentions every "
+            "batch again)"
+        )
+    files = [f for m in entries.values() for f in m["files"]]
+    schema = list(entries.values())[-1]["schema"]
+    return read_files(spark, stage_path(out_dir, _STORES[part]), files, schema)
 
 
 def read_incremental_mentions(spark: SparkSession, out_dir: str) -> DataFrame:
     """The files of every recorded batch of the mention store, read with the
     schema its latest batch recorded."""
-    manifest_path = _batches_path(out_dir)
-    batches = _read_json(manifest_path)
-    unlisted = [b for b, m in batches.items() if "files" not in m]
-    if unlisted:
-        raise ValueError(
-            f"{manifest_path} records no files for batches {unlisted}: re-ingest the store "
-            "(delete it and its _batches.json, then append_mentions every batch again)"
-        )
-    files = [f for m in batches.values() for f in m["files"]]
-    schema = list(batches.values())[-1]["schema"]
-    return read_files(spark, stage_path(out_dir, "mentions_incremental"), files, schema)
+    return _read_store(spark, out_dir, "mentions")
 
 
 def incremental_batches_fingerprint(out_dir: str) -> str:
@@ -286,17 +324,20 @@ def build_knowledge_graph(
     """Full pipeline: transcripts -> mentions -> entities -> triples,
     each stage checkpointed with lineage for exact resume.
 
-    incremental=True reads the append-only mention store maintained by
-    append_mentions() instead of recomputing NER; downstream stages rebuild
-    whenever the ingested-batch set changed (their fingerprints chain off
-    it) and resume otherwise.
+    incremental=True reads the append-only stores maintained by
+    append_mentions() instead of recomputing NER: entities are resolved over
+    the whole mention store, and the triples are the stored surface-level
+    evidence with entity ids joined onto both sides. transcripts is unused
+    then (the evidence carries each batch's role/tool context). Downstream
+    stages rebuild whenever the ingested-batch set changed (their
+    fingerprints chain off it) and resume otherwise.
 
     Returns {"mentions": df, "entities": df, "triples": df, "manifests": [...],
     "resumed": [...]}.
     """
     from ..ner.pipeline import recognize_df
     from .resolution import entity_table, resolve_entities
-    from .triples import extract_triples
+    from .triples import aggregate_triples, extract_triples
 
     config = dict(config or {})
     base_fp = {"model_dir": model_dir, "config": config}
@@ -326,13 +367,26 @@ def build_knowledge_graph(
             )
         )
 
+    def build_triples():
+        if not incremental:
+            return extract_triples(mention_entities, transcripts)
+        ids = mention_entities.select("type", "norm", "entity_id").distinct()
+
+        def side(s):
+            return ids.select(
+                F.col("type").alias(f"{s}_type"), F.col("norm").alias(f"{s}_norm"),
+                F.col("entity_id").alias(s),
+            )
+
+        evidence = (
+            _read_store(spark, out_dir, "evidence")
+            .join(side("subj"), ["subj_type", "subj_norm"])
+            .join(side("obj"), ["obj_type", "obj_norm"])
+        )
+        return aggregate_triples(evidence.where(F.col("subj") != F.col("obj")))
+
     entities, m3, r3 = stage("entities", build_entity_table, m2["fingerprint"])
-    triples, m4, r4 = stage(
-        "triples",
-        lambda: extract_triples(mention_entities, transcripts),
-        m2["fingerprint"],
-        partition_by=["pred"],
-    )
+    triples, m4, r4 = stage("triples", build_triples, m2["fingerprint"], partition_by=["pred"])
 
     return {
         "mentions": mentions,

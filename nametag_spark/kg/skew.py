@@ -4,14 +4,12 @@ Where skew can appear in this engine and how each site is handled:
 
   - NER over turns: the distribution unit is the ROW (conv_id, turn_idx),
     never a whole conversation, so a mega-conversation spreads across
-    partitions by construction (SURVEY §7.3 risk 4). `spread_rows` below
-    additionally round-robins rows when the input arrives pre-clustered
-    (e.g. a single parquet file per conversation).
+    partitions by construction (SURVEY §7.3 risk 4).
   - Joins/aggregations in the relational shell: AQE skew-join splitting is
     enabled in session.py (spark.sql.adaptive.skewJoin.enabled).
   - Hub keys inside aggregations that AQE cannot split (collect_list on a
-    hot (subj, pred, obj)): `salted_two_phase_agg` pre-aggregates on
-    (key, salt) and merges — the classic salting pattern, kept exact.
+    hot (subj, pred, obj)): `triples.aggregate_triples` pre-aggregates on
+    (key, `add_salt`) and merges — the classic salting pattern, kept exact.
 """
 
 from __future__ import annotations
@@ -19,44 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
-def spread_rows(df: DataFrame, partitions: int | None = None) -> DataFrame:
-    """Round-robin repartition: breaks any pre-existing clustering of heavy
-    conversations into single input splits."""
-    partitions = partitions or df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(partitions)
-
-
 def add_salt(df: DataFrame, n_salts: int = 16, salt_col: str = "_salt") -> DataFrame:
     """Deterministic row salt derived from a stable hash of all columns."""
     return df.withColumn(
         salt_col, F.pmod(F.hash(*[F.col(c) for c in df.columns]), F.lit(n_salts))
     )
-
-
-def salted_two_phase_agg(
-    df: DataFrame,
-    keys: list,
-    list_col: str,
-    n_salts: int = 16,
-    list_cap: int | None = None,
-) -> DataFrame:
-    """Exact distinct-list + count aggregation immune to hot keys.
-
-    Phase 1 groups by (keys..., salt) and collects per-salt distinct values
-    (bounded partitions even for a hub key); phase 2 merges the per-salt
-    arrays. Returns keys + `n_<list_col>` (exact distinct count) +
-    `<list_col>s` (distinct values; truncated to list_cap when set — the
-    count stays exact, and truncation is explicit, not silent).
-    """
-    salted = add_salt(df.select(*keys, list_col), n_salts)
-    phase1 = salted.groupBy(*keys, "_salt").agg(
-        F.array_distinct(F.collect_list(list_col)).alias("_vals")
-    )
-    merged = phase1.groupBy(*keys).agg(
-        F.array_distinct(F.flatten(F.collect_list("_vals"))).alias("_all")
-    )
-    out = merged.withColumn(f"n_{list_col}", F.size("_all"))
-    vals = F.array_sort("_all")
-    if list_cap is not None:
-        vals = F.slice(vals, 1, list_cap)
-    return out.withColumn(f"{list_col}s", vals).drop("_all")

@@ -23,6 +23,9 @@ PREDICATE_RULES = [
     ("PER", "TIME", "active_at"),
     ("ORG", "TIME", "active_at"),
 ]
+_PRED_CASE = "CASE " + " ".join(
+    f"WHEN subj_type = '{s}' AND obj_type = '{o}' THEN '{p}'" for s, o, p in PREDICATE_RULES
+) + " END"
 
 
 def triple_evidence(
@@ -32,13 +35,14 @@ def triple_evidence(
     id_cols: tuple = ("entity_id",),
 ) -> DataFrame:
     """Pre-aggregation triple evidence: one row per co-occurring mention
-    pair with its predicate and provenance. The streaming path appends these
-    rows per micro-batch (no global state needed) and aggregates at
-    compaction; the batch path feeds them straight into aggregate_triples.
+    pair with its predicate and provenance. A full build feeds them straight
+    into aggregate_triples; an incremental ingest (graph_io.append_mentions)
+    stores each batch's rows (no global state needed), and the incremental
+    build joins entity ids onto them before aggregating.
 
     id_cols: columns carried from each mention side as subj/obj identity —
     ('entity_id',) after resolution, or none (surface-only evidence) when
-    resolution is deferred to compaction."""
+    resolution comes later, as in the incremental store."""
     use_sent = window == "sentence"
     has_eid = "entity_id" in id_cols
     keys = ["conv_id", "turn_idx"]
@@ -66,10 +70,6 @@ def triple_evidence(
     if n_part <= 0:
         n_part = spark.sparkContext.defaultParallelism
     m = m.repartition(n_part, "conv_id", "turn_idx")
-
-    rules = m.sparkSession.createDataFrame(
-        PREDICATE_RULES, ["subj_type", "obj_type", "pred"]
-    )
 
     def pair_ok(x, y):
         cond = x["tok_start"] < y["tok_start"]
@@ -106,8 +106,10 @@ def triple_evidence(
         cols += [F.col("_p.l.entity_id").alias("subj"), F.col("_p.r.entity_id").alias("obj")]
     pairs = grouped.select(*keys, F.explode(pair_arr).alias("_p")).select(*cols)
 
-    # predicate rules are a tiny dimension -> broadcast hash join
-    triples = pairs.join(F.broadcast(rules), ["subj_type", "obj_type"])
+    # predicate rules are a tiny dimension: one SQL CASE launches no
+    # broadcast job (a join with the rules would, per evidence query) and
+    # is built in one py4j call
+    triples = pairs.withColumn("pred", F.expr(_PRED_CASE)).where(F.col("pred").isNotNull())
 
     if transcripts is not None:
         ctx = transcripts.select("conv_id", "turn_idx", "role", "tool")
@@ -143,8 +145,8 @@ def extract_triples(
 
 
 def aggregate_triples(triples: DataFrame, evidence_cap: int | None = 1000) -> DataFrame:
-    """Evidence rows -> aggregated triple table (used by the batch path and
-    by the streaming compaction over accumulated evidence)."""
+    """Evidence rows -> aggregated triple table (used by the full build and
+    by the incremental build over the stored evidence)."""
     # One fused salted two-phase aggregation carries the head attributes,
     # the co-occurrence count, AND the provenance list (previously a head
     # groupBy + a separate salted agg + a join — two full shuffles over the

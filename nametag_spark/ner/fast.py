@@ -338,8 +338,7 @@ class FastFeaturizer:
         preserving the reference processors' (templates.py process_sentence)
         processor order, per-token features, dedup, and filled-gating
         semantics (parity-tested). Per-token event order equals the
-        reference's, except after a multi-token GazetteersEnhanced walk,
-        whose events follow walk order.
+        reference's.
 
         Returns (soft_pos, soft_fid, fill_idx, fill_rows, fill_ents):
         gazetteer soft features as position-sorted flat event arrays plus the
@@ -528,7 +527,12 @@ class FastFeaturizer:
                             local_ent[j2, btype] = ent_v
                             filled[j2] = True
                 if base_pos:
-                    expanded.append(_window_events(base_pos, base_val, p.window, lo, hi))
+                    # the reference applies each token's events in source
+                    # order, each source's in walk order
+                    order = np.argsort(base_pos, kind="stable")
+                    expanded.append(_window_events(
+                        np.asarray(base_pos)[order], np.asarray(base_val)[order], p.window, lo, hi
+                    ))
             elif isinstance(p, T.Gazetteers):
                 # deprecated raw-lemma prefix map: soft events only, no pins,
                 # emitted in Gazetteers.process_sentence's apply order (no
@@ -537,7 +541,9 @@ class FastFeaturizer:
                     continue
                 raws = [key[1] if isinstance(key, tuple) else key for key in uniques]
                 pmap, info = p.map, p.info
-                first = np.array([pmap.get(r, -1) for r in raws], dtype=np.int64)[codes]
+                # an empty raw lemma is no entry (pmap[""] is parse()'s feature id)
+                first = np.array([pmap.get(r, -1) if r else -1 for r in raws], dtype=np.int64)
+                first = first[codes]
                 span = 2 * p.window + 1
                 G = p.G * span
                 base_pos = []

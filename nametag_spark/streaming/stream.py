@@ -6,10 +6,15 @@ turns flows through the same stateless NER transform (mapInPandas works
 identically on streaming DataFrames), then into watermarked windowed
 aggregations for late-data-tolerant mention statistics, plus a custom
 stateful operator (per-conversation turn dedup) via
-applyInPandasWithState.
+applyInPandasWithState. The incremental KG sinks each micro-batch into the
+incremental store of kg.graph_io (`run_incremental_kg`), the same store a
+batch append writes.
 """
 
 from __future__ import annotations
+
+import hashlib
+import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -66,7 +71,6 @@ def dedup_turns_stateful(stream_df: DataFrame) -> DataFrame:
     the same conversation (exact dedup with per-group state), via
     applyInPandasWithState.
     """
-    import hashlib
 
     def stable_hash(s: str) -> int:
         # process/restart-stable (python's builtin hash is salted)
@@ -92,44 +96,26 @@ def dedup_turns_stateful(stream_df: DataFrame) -> DataFrame:
     )
 
 
-def run_incremental_kg(
-    stream_df: DataFrame,
-    model_dir: str,
-    out_dir: str,
-    checkpoint_path: str,
-    window: str = "sentence",
-):
-    """Incremental KG construction over a transcript stream.
+def run_incremental_kg(stream_df: DataFrame, model_dir: str, out_dir: str, checkpoint_path: str):
+    """Incremental KG construction over a transcript stream: each
+    micro-batch is one graph_io.append_mentions ingest into out_dir (NER
+    mentions plus the batch's surface-level triple evidence, recorded in
+    `_batches.json`). build_knowledge_graph(spark, None, model_dir, out_dir,
+    incremental=True) then builds the graph over everything ingested so far.
 
-    Per micro-batch (foreachBatch = exactly-once with the checkpoint;
-    batch-id-keyed overwrite makes replays idempotent):
-      turns -> NER mentions -> canonicalized SURFACE-level triple evidence
-      appended under out_dir/evidence/batch=<id>/, plus the batch's full
-      mention-surface counts under out_dir/surfaces/batch=<id>/ (ALL
-      surfaces, not just paired ones — resolution needs the complete
-      surface population or clustering diverges from the batch pipeline).
-    Entity resolution is deliberately deferred to compact_triples():
-    clustering is a global decision (a surface observed in batch 900 can
-    merge entities first seen in batch 3), so the stream stays stateless
-    and append-only — the classic evidence-log + periodic-compaction split.
+    The ingest id is derived from the checkpoint path and the micro-batch
+    id: a replayed micro-batch (restart with the same checkpoint) is a
+    recorded no-op, so each batch is stored exactly once, while a fresh
+    checkpoint over an existing store ingests under new ids.
 
     Returns the StreamingQuery (availableNow trigger: drains what exists,
     then stops; restart with the same checkpoint resumes exactly)."""
-    from ..kg.resolution import canonicalize_mentions
-    from ..kg.triples import triple_evidence
-    from ..ner.pipeline import recognize_df
+    from ..kg.graph_io import append_mentions
+
+    run = hashlib.sha256(os.path.abspath(checkpoint_path).encode()).hexdigest()[:12]
 
     def process(batch_df, batch_id: int):
-        mentions = recognize_df(batch_df, model_dir)
-        m = canonicalize_mentions(mentions).where(F.length("norm") > 0).persist()
-        ev = triple_evidence(
-            m, batch_df.select("conv_id", "turn_idx", "role", "tool"), window, id_cols=()
-        )
-        ev.write.mode("overwrite").parquet(f"{out_dir}/evidence/batch={batch_id}")
-        m.groupBy("type", "norm").agg(F.count(F.lit(1)).alias("n_mentions")).write.mode(
-            "overwrite"
-        ).parquet(f"{out_dir}/surfaces/batch={batch_id}")
-        m.unpersist()
+        append_mentions(batch_df.sparkSession, batch_df, model_dir, out_dir, f"{run}-{batch_id}")
 
     return (
         stream_df.writeStream.foreachBatch(process)
@@ -137,65 +123,6 @@ def run_incremental_kg(
         .trigger(availableNow=True)
         .start()
     )
-
-
-def compact_triples(
-    spark: SparkSession,
-    out_dir: str,
-    evidence_cap: int | None = 1000,
-    lsh_hashes: int = 12,
-    lsh_bands: int = 4,
-    shingle_k: int = 3,
-    jaccard_threshold: float = 0.6,
-    max_bucket: int = 200,
-):
-    """Compaction over the accumulated evidence log: resolve entities across
-    ALL surfaces seen so far (LSH blocking + connected components on the
-    distinct (type, norm) table — small relative to the evidence), assign
-    ids to both pair sides, and run the fused triple aggregation. Returns
-    the triples DataFrame; callers persist it with graph_io.write_stage for
-    lineage + pred partitioning."""
-    from ..kg.resolution import assign_entity_ids
-    from ..kg.triples import aggregate_triples
-
-    ev = spark.read.parquet(f"{out_dir}/evidence")
-
-    surfaces = (
-        spark.read.parquet(f"{out_dir}/surfaces")
-        .groupBy("type", "norm")
-        .agg(F.sum("n_mentions").alias("n_mentions"))
-        .persist()
-    )
-    # the batch pipeline's assignment with the same blocking/verify
-    # parameters as resolve_entities' defaults, so the compacted clustering
-    # equals the batch pipeline's
-    assign = assign_entity_ids(
-        surfaces,
-        lsh_hashes=lsh_hashes,
-        lsh_bands=lsh_bands,
-        shingle_k=shingle_k,
-        jaccard_threshold=jaccard_threshold,
-        max_bucket=max_bucket,
-    )
-
-    subj_assign = assign.select(
-        F.col("type").alias("subj_type"),
-        F.col("norm").alias("subj_norm"),
-        F.col("entity_id").alias("subj"),
-    )
-    obj_assign = assign.select(
-        F.col("type").alias("obj_type"),
-        F.col("norm").alias("obj_norm"),
-        F.col("entity_id").alias("obj"),
-    )
-    keyed = (
-        ev.join(subj_assign, ["subj_type", "subj_norm"])
-        .join(obj_assign, ["obj_type", "obj_norm"])
-        .where(F.col("subj") != F.col("obj"))
-    )
-    out = aggregate_triples(keyed, evidence_cap)
-    surfaces.unpersist()
-    return out
 
 
 def run_stream_to_parquet(

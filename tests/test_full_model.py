@@ -302,6 +302,96 @@ def test_deprecated_gazetteers_match_raw_lemmas(tmp_path):
     _batch_equals_reference(model, [forms, ["Praha", "and", "Prahy", "."], ["Yorku", "alone"]])
 
 
+def test_deprecated_gazetteers_skip_empty_raw_lemmas(tmp_path, monkeypatch):
+    """A token whose external raw lemma is empty ('Alice  NNP': two spaces)
+    matches no plain Gazetteers entry. The entry index shares its dict with
+    the feature id parse() stores under "", which must not be read as an
+    entry, by the reference processors or by the batched plan."""
+    from nametag_spark.features.templates import Sentence
+
+    (tmp_path / "locs.txt").write_text("Prague\nNew York\n", encoding="utf-8")
+    (tmp_path / "orgs.txt").write_text("Acme Corp\nNew York Times\n", encoding="utf-8")
+    tdf, gdf = synth_transcripts(n_conversations=10, seed=1)
+    model = train_ner(
+        "Form/1\nGazetteers/1 locs.txt orgs.txt\nGazetteers/2 orgs.txt\nPreviousStage/1",
+        gold_to_conll(tdf, gdf),
+        stages=2,
+        params={"iterations": 3},
+        base_dir=str(tmp_path),
+    )
+    # the external tagger's analyses are the sentence: "form raw_lemma tag"
+    monkeypatch.setattr(model, "make_sentence", Sentence.from_external)
+    tokens = ["Alice  NNP", "left leave VBD", "New", "York", "for", "Prague", ".  ."]
+    assert model.make_sentence(tokens).get_raw_lemmas()[0] == ""
+
+    got, expected = _pin_soft_events(model, tokens)
+    assert {p for p, _ in got} >= {2, 3, 5}
+    assert got == expected
+    _batch_equals_reference(
+        model, [tokens, ["Acme", "Corp", "hired", "Bob  NNP"], ["  NNP", "New"]]
+    )
+
+
+def test_gazetteers_enhanced_walk_events_in_reference_order(tmp_path, monkeypatch):
+    """Overlapping multi-token GazetteersEnhanced entries: every token's soft
+    events come in the order the reference processor appends them (the
+    scorer sums a token's events in that order), decisions equal
+    recognize_sentence, and so do each stage's probabilities up to the
+    scorer's float association (it adds per-form partial sums and the
+    summed events to the omnipresent weights, where the reference sums
+    every feature of a token left to right)."""
+    import numpy as np
+
+    from nametag_spark.ner import core
+
+    # two lists: a later walk start adds events at a token an earlier,
+    # longer walk has passed ("York" of "York City" after "New York City")
+    (tmp_path / "gaz_loc.txt").write_text("New York\nNew York City\n", encoding="utf-8")
+    (tmp_path / "gaz_org.txt").write_text("York City\nCity Hall\n", encoding="utf-8")
+    tdf, gdf = synth_transcripts(n_conversations=15, seed=1)
+    # sentences over the entries, so the gazetteer features get weights
+    gaz_conll = "\n\n".join([
+        "She\tO\nmoved\tO\nto\tO\nNew\tB-LOC\nYork\tI-LOC\nCity\tI-LOC\nHall\tI-LOC\n.\tO",
+        "York\tB-ORG\nCity\tI-ORG\nis\tO\nbig\tO\n.\tO",
+        "Bob\tB-PER\nsaw\tO\nCity\tB-ORG\nHall\tI-ORG\n.\tO",
+    ] * 3)
+    model = train_ner(
+        "Form/1\nGazetteersEnhanced/2 form embed_in_model gaz_loc LOC gaz_org ORG\n"
+        "PreviousStage/2",
+        gold_to_conll(tdf, gdf) + "\n\n" + gaz_conll,
+        stages=2,
+        params={"iterations": 4},
+        base_dir=str(tmp_path),
+    )
+    forms_lists = [
+        "She moved to New York City Hall last year .".split(),
+        "York City Hall is in New York City .".split(),
+        "New York City".split(),
+        "Bob saw New York and City Hall".split(),
+    ]
+    for forms in forms_lists:
+        got, expected = _pin_soft_events(model, forms)
+        assert got and got == expected, forms
+
+    stages = {}  # each stage's probabilities, as passed to Viterbi
+    for fn in ("viterbi_decode", "viterbi_decode_batch"):
+        def record(local, ent, *args, _fn=getattr(core, fn), _name=fn):
+            stages.setdefault(_name, []).append(np.array(local))
+            return _fn(local, ent, *args)
+
+        monkeypatch.setattr(core, fn, record)
+    rec = _BatchRecognizer(model)
+    for forms in forms_lists:
+        stages.clear()
+        assert rec.recognize_batch([model.make_sentence(forms)]) == [
+            model.recognize_sentence(forms)
+        ]
+        batched, ref = stages["viterbi_decode_batch"], stages["viterbi_decode"]
+        assert len(batched) == len(ref) == 2
+        for a, b in zip(batched, ref):
+            np.testing.assert_allclose(a, b, rtol=0, atol=1e-14)
+
+
 def test_pdt_lemma_split_and_lemma_term():
     """PDT lemma structure split (czech_lemma_addinfo.h:35-56) and
     CzechLemmaTerm over real lemma comments."""

@@ -1,6 +1,7 @@
 """graph_io manifests: footer-derived row counters and schema, reads of
-exactly the files a manifest lists, atomic manifest writes, and the Spark jobs
-a stage write or resume launches."""
+exactly the files a manifest lists, atomic manifest writes, the Spark jobs
+a stage write or resume launches, and the incremental store (mentions plus
+per-batch triple evidence) built without transcripts."""
 
 import json
 import os
@@ -42,6 +43,12 @@ def _rows_per_file(spark, path):
     """{file relative to path: rows}, counted by Spark."""
     counts = spark.read.parquet(path).groupBy(F.input_file_name().alias("f")).count().collect()
     return {os.path.relpath(unquote(urlparse(r["f"]).path), path): r["count"] for r in counts}
+
+
+def _triple_rows(df):
+    pdf = df.toPandas()
+    pdf["evidence"] = pdf["evidence"].map(tuple)
+    return sorted(map(tuple, pdf.itertuples(index=False)))
 
 
 def _check_manifest(spark, path, manifest):
@@ -138,6 +145,13 @@ def test_incremental_store_manifest_matches_spark(spark, tiny_model_dir, store):
             f: n for f, n in files.items() if f.startswith(f"ingest_batch={batch_id}/")
         }
     assert read_incremental_mentions(spark, store).schema == back.schema
+    ev_files = _rows_per_file(spark, stage_path(store, "evidence_incremental"))
+    for batch_id, m in manifest.items():
+        ev = m["evidence"]
+        mine = {f: n for f, n in ev_files.items() if f.startswith(f"ingest_batch={batch_id}/")}
+        assert all(f.startswith(f"ingest_batch={batch_id}/") for f in ev["files"])
+        assert set(mine) <= set(ev["files"])
+        assert ev["rows"] == sum(mine.values()) > 0
     g = build_knowledge_graph(spark, None, tiny_model_dir, store, incremental=True)
     assert g["mentions"].schema == back.drop("ingest_batch").schema
     assert g["mentions"].count() == sum(per_batch.values())
@@ -221,9 +235,12 @@ def test_store_serves_only_recorded_batches(spark, tiny_model_dir, tmp_path, mon
     with pytest.raises(OSError, match="disk full"):
         append_mentions(spark, b2, tiny_model_dir, out, "batch-2")
     monkeypatch.undo()
-    orphan = os.path.join(stage_path(out, "mentions_incremental"), "ingest_batch=batch-2")
-    assert os.path.isdir(orphan)
+    for store in ("mentions_incremental", "evidence_incremental"):
+        assert os.path.isdir(os.path.join(stage_path(out, store), "ingest_batch=batch-2"))
     assert sorted(map(tuple, read_incremental_mentions(spark, out).collect())) == first
+    triples = build_knowledge_graph(spark, None, tiny_model_dir, out, incremental=True)["triples"]
+    provenance = [e for r in triples.select("evidence").collect() for e in r["evidence"]]
+    assert provenance and not [e for e in provenance if "-b2:" in e]
 
     r = append_mentions(spark, b2, tiny_model_dir, out, "batch-2")
     assert r["appended"] and r["rows"] > 0
@@ -231,6 +248,10 @@ def test_store_serves_only_recorded_batches(spark, tiny_model_dir, tmp_path, mon
     assert back.where(F.col("ingest_batch") == "batch-2").count() == r["rows"]
     raw = spark.read.parquet(stage_path(out, "mentions_incremental"))
     assert raw.where(F.col("ingest_batch") == "batch-2").count() == r["rows"]
+    with open(os.path.join(out, "mentions_incremental._batches.json"), encoding="utf-8") as f:
+        ev = json.load(f)["batch-2"]["evidence"]
+    raw_ev = spark.read.parquet(stage_path(out, "evidence_incremental"))
+    assert raw_ev.where(F.col("ingest_batch") == "batch-2").count() == ev["rows"] > 0
 
 
 def test_store_without_file_lists_asks_to_reingest(spark, store, tmp_path):
@@ -244,6 +265,56 @@ def test_store_without_file_lists_asks_to_reingest(spark, store, tmp_path):
         json.dump(batches, f)
     with pytest.raises(ValueError, match="re-ingest"):
         read_incremental_mentions(spark, out)
+
+
+def test_store_without_evidence_asks_to_reingest(spark, tiny_model_dir, store, tmp_path):
+    """A store whose _batches.json records no evidence for a batch (written
+    before evidence was stored) is not built from a directory read."""
+    out = str(tmp_path / "inc")
+    shutil.copytree(store, out)
+    manifest_path = os.path.join(out, "mentions_incremental._batches.json")
+    with open(manifest_path, encoding="utf-8") as f:
+        batches = json.load(f)
+    del batches["batch-1"]["evidence"]
+    with open(manifest_path, "w", encoding="utf-8") as f:
+        json.dump(batches, f)
+    with pytest.raises(ValueError, match=r"no evidence files for batches \['batch-1'\].*re-ingest"):
+        build_knowledge_graph(spark, None, tiny_model_dir, out, incremental=True)
+
+
+def test_incremental_build_keeps_tool_context(spark, tiny_model_dir, store, tmp_path):
+    """An incremental build (no transcripts) has the triples of a full build
+    over the same turns, with their transcripts, including the
+    `*_via_<tool>` predicates of tool turns: each batch's evidence carries
+    its own role/tool context."""
+    full = build_knowledge_graph(
+        spark,
+        _transcripts(spark, 4, 41).union(_transcripts(spark, 4, 42, "-b2")),
+        tiny_model_dir,
+        str(tmp_path / "full"),
+    )["triples"]
+    inc = build_knowledge_graph(spark, None, tiny_model_dir, store, incremental=True)["triples"]
+    assert full.where(F.col("pred").contains("_via_")).count() > 0
+    assert _triple_rows(inc.select(full.columns)) == _triple_rows(full)
+
+
+def test_batch_without_mentions(spark, tiny_model_dir, tmp_path):
+    """A batch in which NER finds nothing appends, builds and resumes."""
+    tdf = pd.DataFrame(
+        {"conv_id": ["c1", "c1"], "turn_idx": [0, 1], "role": ["user", "tool"],
+         "text": ["hello there", "ok ."], "tool": ["", "search"]}
+    ).astype({"turn_idx": "int32"})
+    out = str(tmp_path / "inc")
+    r = append_mentions(spark, spark.createDataFrame(tdf), tiny_model_dir, out, "empty")
+    assert r == {"batch_id": "empty", "rows": 0, "appended": True}
+    with open(os.path.join(out, "mentions_incremental._batches.json"), encoding="utf-8") as f:
+        entry = json.load(f)["empty"]
+    assert (entry["files"], entry["evidence"]["rows"], entry["evidence"]["files"]) == ([], 0, [])
+    res = build_knowledge_graph(spark, None, tiny_model_dir, out, incremental=True)
+    assert [m["rows"] for m in res["manifests"][1:]] == [0, 0, 0]
+    assert res["mentions"].count() == 0 and res["triples"].count() == 0
+    again = build_knowledge_graph(spark, None, tiny_model_dir, out, incremental=True)
+    assert again["resumed"] == [True] * 4
 
 
 def test_resume_rebuilds_a_stage_with_a_missing_file(spark, tiny_model_dir, built, tmp_path):

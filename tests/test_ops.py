@@ -486,3 +486,16 @@ def test_cosine_topk_degenerate_vectors_match_jvm(spark):
 
     ek = key(cosine_topk(corpus, empty_q, k=4))
     assert all(c is None for (_q, _r, _v, c) in ek) and len(ek) == 4
+
+
+def test_pii_flags_unit(spark):
+    import pandas as pd
+
+    from nametag_spark.ops.text import with_pii_flags
+
+    df = spark.createDataFrame(
+        pd.DataFrame({"doc_id": [1, 2], "text": ["mail a@b.co now", "all clean here"]})
+    )
+    out = {r["doc_id"]: (r["n_email"], r["has_pii"]) for r in with_pii_flags(df).collect()}
+    assert out[1] == (1, True)
+    assert out[2] == (0, False)

@@ -25,6 +25,40 @@ def test_tokenize_df_matches_local(spark):
         assert got[(row.conv_id, row.turn_idx)] == expect
 
 
+def test_per_turn_text_equality_under_stable_ordering(spark):
+    """North-rule invariant: reconstructing each turn from its token table
+    (ordered by the stable (conv_id, turn_idx) window) reproduces the text
+    whitespace-insensitively, and token char spans slice exactly."""
+    from pyspark.sql import Window, functions as F
+
+    tdf, _ = synth_transcripts(n_conversations=10, seed=23)
+    sdf = spark.createDataFrame(tdf)
+
+    # stable turn ordering (Window over conv_id, turn_idx)
+    w = Window.partitionBy("conv_id").orderBy("turn_idx")
+    ordered = sdf.withColumn("turn_rank", F.row_number().over(w))
+    ranks = ordered.select("conv_id", "turn_idx", "turn_rank").toPandas()
+    assert (ranks["turn_rank"] == ranks["turn_idx"] + 1).all()
+
+    tokens = tokenize_df(sdf)
+    joined = (
+        tokens.join(sdf.select("conv_id", "turn_idx", "text"), ["conv_id", "turn_idx"])
+        .withColumn("sliced", F.expr("substring(text, start + 1, length)"))
+    )
+    mismatch = joined.where(F.col("sliced") != F.col("form")).count()
+    assert mismatch == 0
+
+    recon = (
+        tokens.orderBy("conv_id", "turn_idx", "sent_idx", "tok_idx")
+        .groupBy("conv_id", "turn_idx")
+        .agg(F.concat_ws(" ", F.collect_list("form")).alias("recon"))
+        .toPandas()
+    )
+    orig = {(r.conv_id, r.turn_idx): r.text for r in tdf.itertuples(index=False)}
+    for r in recon.itertuples(index=False):
+        assert r.recon == orig[(r.conv_id, r.turn_idx)]
+
+
 def test_spark_matches_oracle(spark, tiny_model_dir):
     """Spark mentions == single-process oracle mentions, row for row."""
     tdf, _ = synth_transcripts(n_conversations=15, seed=9)

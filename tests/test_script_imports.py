@@ -95,8 +95,9 @@ def test_guard_covers_the_entry_points():
 
 
 def test_guard_checks_call_signatures(tmp_path):
-    """A call that no longer binds is reported (checked on parsed snippets),
-    for functions and for class constructors."""
+    """A call that no longer binds, or an import of a removed name, is
+    reported (checked on parsed snippets), for functions and for class
+    constructors."""
     from nametag_spark.kg.graph_io import run_stage
     from nametag_spark.ner.pipeline import _BatchRecognizer
 
@@ -115,6 +116,20 @@ def test_guard_checks_call_signatures(tmp_path):
         "rec = _BatchRecognizer(model, use_fast=False)\n"
     )
     assert _stale_names(str(script)) == ["2: call of _BatchRecognizer"]
+
+    # removed names: the streaming compaction, run_incremental_kg's window
+    from nametag_spark.streaming.stream import run_incremental_kg
+
+    assert _binds(run_incremental_kg, call("run_incremental_kg(stream, model, out, ckpt)"))
+    script.write_text(
+        "from nametag_spark.streaming.stream import compact_triples, run_incremental_kg\n"
+        "q = run_incremental_kg(stream, model_dir, out_dir, ckpt, window='turn')\n"
+        "triples = compact_triples(spark, out_dir)\n"
+    )
+    assert _stale_names(str(script)) == [
+        "1: from nametag_spark.streaming.stream import compact_triples",
+        "2: call of run_incremental_kg",
+    ]
 
 
 @pytest.mark.parametrize("path", FILES, ids=lambda p: os.path.relpath(p, ROOT))

@@ -1,41 +1,6 @@
-"""Skew handling: mega-conversation spread, salted aggregation exactness."""
+"""Skew handling: deterministic salts, exact salted triple aggregation."""
 
-from pyspark.sql import functions as F
-
-from nametag_spark.data.synth import synth_transcripts
-from nametag_spark.kg.skew import add_salt, salted_two_phase_agg, spread_rows
-
-
-def test_mega_conversation_spreads_across_partitions(spark):
-    # one conversation with 100x the median turns (FIXTURES.md skew variant)
-    tdf, _ = synth_transcripts(n_conversations=8, seed=13, mega_conversation=True)
-    sdf = spread_rows(spark.createDataFrame(tdf), partitions=8)
-    per_part = (
-        sdf.groupBy(F.spark_partition_id().alias("p")).count().toPandas()["count"]
-    )
-    assert len(per_part) == 8
-    # round-robin: no partition holds more than ~2x the mean
-    assert per_part.max() <= 2 * per_part.mean()
-
-
-def test_salted_agg_matches_plain(spark):
-    rows = [("k1", f"e{i % 7}") for i in range(200)] + [("k2", "x")] * 50 + [("k3", "y")]
-    df = spark.createDataFrame(rows, ["key", "evidence"])
-    out = {
-        r["key"]: (r["n_evidence"], list(r["evidences"]))
-        for r in salted_two_phase_agg(df, ["key"], "evidence").collect()
-    }
-    assert out["k1"][0] == 7 and sorted(out["k1"][1]) == [f"e{i}" for i in range(7)]
-    assert out["k2"] == (1, ["x"])
-    assert out["k3"] == (1, ["y"])
-
-
-def test_salted_agg_cap_is_explicit(spark):
-    rows = [("k", f"e{i:04d}") for i in range(50)]
-    df = spark.createDataFrame(rows, ["key", "evidence"])
-    out = salted_two_phase_agg(df, ["key"], "evidence", list_cap=10).collect()[0]
-    assert out["n_evidence"] == 50  # count stays exact
-    assert len(out["evidences"]) == 10  # list truncated per the cap
+from nametag_spark.kg.skew import add_salt
 
 
 def test_salt_determinism(spark):

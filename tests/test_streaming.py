@@ -16,6 +16,15 @@ from nametag_spark.streaming.stream import (
 )
 
 
+def incremental_triples(spark, model_dir, out_dir, config=None):
+    """The triples of an incremental build over the store under out_dir."""
+    from nametag_spark.kg.graph_io import build_knowledge_graph
+
+    return build_knowledge_graph(
+        spark, None, model_dir, out_dir, config=config, incremental=True
+    )["triples"]
+
+
 @pytest.fixture(scope="module")
 def stream_src(spark, tmp_path_factory):
     base = tmp_path_factory.mktemp("stream")
@@ -102,13 +111,13 @@ def test_stream_resume_from_checkpoint(spark, tiny_model_dir, stream_src, tmp_pa
 
 
 def test_incremental_kg_matches_batch(spark, tiny_model_dir, stream_src, tmp_path):
-    """Evidence-log streaming + compaction must produce EXACTLY the batch
-    pipeline's triple table on the same data (ids, norms, counts,
-    provenance)."""
+    """Streaming ingest into the incremental store, then an incremental
+    build, must produce EXACTLY the batch pipeline's triple table on the
+    same data (ids, norms, counts, provenance)."""
     from nametag_spark.kg.resolution import release_persisted, resolve_entities
     from nametag_spark.kg.triples import extract_triples
     from nametag_spark.ner.pipeline import recognize_df
-    from nametag_spark.streaming.stream import compact_triples, run_incremental_kg
+    from nametag_spark.streaming.stream import run_incremental_kg
 
     src, tdf, _base = stream_src
     out_dir = str(tmp_path / "kg")
@@ -125,7 +134,7 @@ def test_incremental_kg_matches_batch(spark, tiny_model_dir, stream_src, tmp_pat
                 "subj_norm", "obj_norm", "n_evidence", "evidence", "n_cooccur"]
         return sorted(map(tuple, pdf[cols].itertuples(index=False)))
 
-    incremental = rows(compact_triples(spark, out_dir))
+    incremental = rows(incremental_triples(spark, tiny_model_dir, out_dir))
 
     batch_input = spark.createDataFrame(tdf)
     mentions = recognize_df(batch_input, tiny_model_dir)
@@ -141,14 +150,14 @@ def test_incremental_kg_matches_batch(spark, tiny_model_dir, stream_src, tmp_pat
         read_transcript_stream(spark, src), tiny_model_dir, out_dir, ckpt
     )
     q2.awaitTermination(120)
-    assert rows(compact_triples(spark, out_dir)) == incremental
+    assert rows(incremental_triples(spark, tiny_model_dir, out_dir)) == incremental
 
 
 def test_incremental_kg_bench_scale_with_kill_restart(spark, tiny_model_dir, tmp_path):
     """Round-5 scale run (verdict #7): the incremental KG over the
     bench-shaped corpus (sf0.1 synth: 800 conversations, ~4.9k turns) split
     into ~20 micro-batches, with a mid-stream KILL + checkpoint restart —
-    the compacted triple table must EXACTLY equal the batch pipeline's.
+    the incremental build's triple table must EXACTLY equal the batch pipeline's.
     Per-batch latency is read off the query progress (BENCH.md records a
     representative run)."""
     import json
@@ -157,7 +166,7 @@ def test_incremental_kg_bench_scale_with_kill_restart(spark, tiny_model_dir, tmp
     from nametag_spark.kg.resolution import release_persisted, resolve_entities
     from nametag_spark.kg.triples import extract_triples
     from nametag_spark.ner.pipeline import recognize_df
-    from nametag_spark.streaming.stream import compact_triples, run_incremental_kg
+    from nametag_spark.streaming.stream import run_incremental_kg
 
     tdf, _ = synth_transcripts(n_conversations=800, seed=42)
     src = str(tmp_path / "src")
@@ -201,7 +210,7 @@ def test_incremental_kg_bench_scale_with_kill_restart(spark, tiny_model_dir, tmp
                 "subj_norm", "obj_norm", "n_evidence", "n_cooccur"]
         return sorted(map(tuple, pdf[cols].itertuples(index=False)))
 
-    incremental = rows(compact_triples(spark, out_dir))
+    incremental = rows(incremental_triples(spark, tiny_model_dir, out_dir))
 
     batch_input = spark.createDataFrame(tdf)
     mentions = recognize_df(batch_input, tiny_model_dir)
@@ -216,7 +225,7 @@ def test_incremental_kg_bench_scale_with_kill_restart(spark, tiny_model_dir, tmp
 def test_incremental_kg_widevocab_split_path_matches_batch(
     spark, tiny_model_dir, tmp_path
 ):
-    """Round-5 verdict #5: compaction == batch over a WIDE-VOCABULARY corpus
+    """Round-5 verdict #5: incremental build == batch over a WIDE-VOCABULARY corpus
     (vocab_scale=10) with a max_bucket small enough that the oversized-bucket
     SPLIT policy actually executes on both sides — the r5 kill-restart test
     only covered the fixture vocabulary, where no bucket is ever oversized
@@ -227,7 +236,7 @@ def test_incremental_kg_widevocab_split_path_matches_batch(
         resolve_entities,
     )
     from nametag_spark.kg.triples import extract_triples
-    from nametag_spark.streaming.stream import compact_triples, run_incremental_kg
+    from nametag_spark.streaming.stream import run_incremental_kg
 
     cap = 8
     tdf, _ = synth_transcripts(n_conversations=150, seed=9, vocab_scale=10)
@@ -249,7 +258,9 @@ def test_incremental_kg_widevocab_split_path_matches_batch(
                 "subj_norm", "obj_norm", "n_evidence", "evidence", "n_cooccur"]
         return sorted(map(tuple, pdf[cols].itertuples(index=False)))
 
-    incremental = rows(compact_triples(spark, out_dir, max_bucket=cap))
+    incremental = rows(incremental_triples(
+        spark, tiny_model_dir, out_dir, config={"resolution": {"max_bucket": cap}}
+    ))
 
     batch_input = spark.createDataFrame(tdf)
     from nametag_spark.ner.pipeline import recognize_df
