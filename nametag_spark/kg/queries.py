@@ -1,7 +1,7 @@
 """Query helpers over the materialized knowledge graph.
 
-What a consumer of the graph tables actually runs: degree/hub statistics,
-neighborhood expansion, bounded path queries. All plain DataFrame joins /
+What a consumer of the graph tables actually runs: degree statistics,
+2-hop path expansion, per-predicate cardinalities. All plain DataFrame joins /
 aggregations over the (subj, pred, obj) triple table — Catalyst handles the
 rest; the triple table is pred-partitioned on disk so predicate-filtered
 queries prune partitions at the scan.
@@ -9,7 +9,7 @@ queries prune partitions at the scan.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 
 def entity_degrees(triples: DataFrame) -> DataFrame:
@@ -25,30 +25,6 @@ def entity_degrees(triples: DataFrame) -> DataFrame:
         .fillna({"out_degree": 0, "in_degree": 0})
         .withColumn("degree", F.col("out_degree") + F.col("in_degree"))
     )
-
-
-def top_hubs(triples: DataFrame, k: int = 10) -> DataFrame:
-    """k highest-degree entities (ties broken by entity id)."""
-    return (
-        entity_degrees(triples)
-        .orderBy(F.desc("degree"), F.asc("entity"))
-        .limit(k)
-    )
-
-
-def neighbors(triples: DataFrame, entity, direction: str = "both") -> DataFrame:
-    """Distinct (neighbor, pred, direction) rows for one entity."""
-    out_n = triples.where(F.col("subj") == entity).select(
-        F.col("obj").alias("neighbor"), "pred", F.lit("out").alias("direction")
-    )
-    in_n = triples.where(F.col("obj") == entity).select(
-        F.col("subj").alias("neighbor"), "pred", F.lit("in").alias("direction")
-    )
-    if direction == "out":
-        return out_n.distinct()
-    if direction == "in":
-        return in_n.distinct()
-    return out_n.union(in_n).distinct()
 
 
 def two_hop_paths(triples: DataFrame) -> DataFrame:

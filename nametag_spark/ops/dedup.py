@@ -1,4 +1,4 @@
-"""Deduplication operators: exact, MinHash+LSH, SimHash, n-gram Jaccard,
+"""Deduplication operators: MinHash+LSH, SimHash signatures, n-gram Jaccard,
 embedding-cosine near-dup (task brief §ops).
 
 All deterministic (md5-derived hashing) and — except the embedding LSH scale
@@ -12,23 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
-from .text import hash64, spread_small_input, tokens_col
-
-
-def exact_dup_groups(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Hash-groupBy exact dedup: one row per duplicated normalized text with
-    the kept (minimum) id, duplicate count, and dropped ids."""
-    norm = F.trim(F.lower(F.col(text_col)))
-    h = df.select(F.col(id_col), F.md5(norm).alias("text_hash"))
-    return (
-        h.groupBy("text_hash")
-        .agg(
-            F.min(id_col).alias("keep_id"),
-            F.count(F.lit(1)).alias("n_dups"),
-            F.sort_array(F.collect_list(id_col)).alias("ids"),
-        )
-        .where(F.col("n_dups") > 1)
-    )
+from .text import spread_small_input, tokens_col
 
 
 def minhash_dup_pairs(
@@ -56,9 +40,10 @@ def minhash_dup_pairs(
     12-hash and 48-hash passes separately, shingling and md5-ing the
     corpus twice). The pass is the Arrow signature kernel
     (minhash_signatures_kernel — value-identical to the declarative
-    explode->groupBy reference, parity-pinned); banding, the cap/split
-    policy, and the estimate prefilter then run partition-locally in the
-    bucket kernel after one hash exchange (_kernel_banded_pairs). The
+    explode->groupBy reference for unique ids, parity-pinned); banding,
+    the cap/split policy, and the estimate prefilter then run
+    partition-locally in the bucket kernel after one hash exchange
+    (_kernel_banded_pairs). The
     exact-Jaccard verify (jaccard_filter) computes shingle ARRAYS only for
     docs that appear in a candidate pair (semi-join prune — the pre-r8
     verify built the arrays for the whole corpus). Outputs
@@ -71,7 +56,13 @@ def minhash_dup_pairs(
     dropped with probability ~0.2%. When bands == n_hashes (1-row bands:
     LSH recall is already governed by any-single-hash collision) the
     prefilter is skipped entirely, since any extra filter would be strictly
-    tighter than the banding the caller asked for."""
+    tighter than the banding the caller asked for.
+
+    Precondition for reference equality: id_col is unique. The signature
+    kernel emits one row per input row, so docs sharing an id are signed
+    separately, where the declarative minhash_signatures merges them into
+    one signature. Such ids still pair only with other ids (never (id, id)),
+    but the pairs are not the reference's."""
     from ..kg.resolution import (
         _kernel_banded_pairs,
         _register_persisted,
@@ -201,59 +192,6 @@ def with_simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text", 
             yield pdf.assign(simhash=pd.Series(sigs, index=pdf.index))
 
     return df.mapInPandas(kernel, schema=schema)
-
-
-def simhash_dup_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bits: int = 32,
-    bands: int = 4,
-    max_hamming: int = 3,
-) -> DataFrame:
-    """Near-dup pairs by SimHash: band-equality blocking (pigeonhole: any
-    pair with hamming <= bands-1 shares a band), exact hamming verify."""
-    sh = with_simhash(df, id_col, text_col, bits).select(F.col(id_col).alias("_id"), "simhash")
-    width = bits // bands
-    mask = (1 << width) - 1
-    band_rows = sh.select(
-        "_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftright("simhash", b * width).bitwiseAND(F.lit(mask)).alias("val"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("_id", "simhash", F.col("bk.band").alias("band"), F.col("bk.val").alias("val"))
-    l, r = band_rows.alias("l"), band_rows.alias("r")
-    pairs = (
-        l.join(
-            r,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.val") == F.col("r.val"))
-            & (F.col("l._id") < F.col("r._id")),
-        )
-        .select(
-            F.col("l._id").alias("a"),
-            F.col("r._id").alias("b"),
-            F.col("l.simhash").alias("sh_a"),
-            F.col("r.simhash").alias("sh_b"),
-        )
-        .distinct()
-    )
-    xor = F.col("sh_a").bitwiseXOR(F.col("sh_b"))
-    hamming = F.bit_count(xor)
-    return (
-        pairs.withColumn("hamming", hamming)
-        .where(F.col("hamming") <= max_hamming)
-        .select("a", "b", "hamming")
-    )
 
 
 def ngram_jaccard_pairs(

@@ -1,7 +1,7 @@
 """Multimodal column plumbing (task brief §ops).
 
 Image/audio/video payloads are opaque `binary` columns with typed metadata;
-decode / feature-extract / resize / frame-sample run as Arrow-batched
+decode / feature-extract / resize run as Arrow-batched
 mapInPandas transforms. The actual codec work is STUBBED (no image/audio
 libraries in this container): `decoder="fake"` produces deterministic
 hash-derived features so the Spark-side plumbing — schema, batching,
@@ -21,8 +21,6 @@ from pyspark.sql import DataFrame
 ASSET_SCHEMA = "asset_id long, kind string, data binary, width int, height int, duration_ms int"
 
 FEATURES_SCHEMA = "asset_id long, kind string, feature array<float>, feat_dim int"
-
-FRAMES_SCHEMA = "asset_id long, frame_idx int, frame_ms int, frame binary"
 
 
 def synth_asset_rows(n: int = 64, seed: int = 42) -> list:
@@ -129,30 +127,3 @@ def resize_images(df: DataFrame, out_w: int = 32, out_h: int = 32, decoder: str 
         .mapInPandas(fn, schema=RESIZED_SCHEMA)
     )
 
-
-def sample_frames(df: DataFrame, every_ms: int = 5000, max_frames: int = 8, decoder: str = "fake") -> DataFrame:
-    """video -> sampled frames (binary). Stub emits deterministic slices of
-    the payload as stand-in frame bytes; the schema/batch shape is real."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if decoder == "real":
-                raise NotImplementedError("real frame decode requires ffmpeg; use decoder='fake'")
-            out = {"asset_id": [], "frame_idx": [], "frame_ms": [], "frame": []}
-            for aid, dur, data in zip(pdf["asset_id"], pdf["duration_ms"], pdf["data"]):
-                if dur is None or data is None:
-                    continue
-                n = min(max_frames, max(1, int(dur) // every_ms))
-                raw = bytes(data)
-                for j in range(n):
-                    out["asset_id"].append(aid)
-                    out["frame_idx"].append(j)
-                    out["frame_ms"].append(j * every_ms)
-                    out["frame"].append(bytearray(raw[j % 16 : j % 16 + 64]))
-            yield pd.DataFrame(out)
-
-    return (
-        df.where("kind = 'video'")
-        .select("asset_id", "duration_ms", "data")
-        .mapInPandas(fn, schema=FRAMES_SCHEMA)
-    )

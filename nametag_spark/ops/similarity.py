@@ -38,9 +38,9 @@ def cosine_topk(
     already broadcast) so it collects to the driver and ships inside an
     Arrow-batched mapInPandas kernel over the corpus scan; each batch
     computes all query scores with vectorized numpy and emits only its
-    per-query top-k (plus any null/NaN-scored rows so degenerate inputs
-    keep the exact JVM ordering semantics), and a final window over the
-    tiny union ranks globally. The previous formulation evaluated the dot
+    per-query top-k (plus its k smallest-id NaN-scored and k smallest-id
+    NULL-scored rows, so degenerate inputs keep the exact JVM ordering
+    semantics), and a final window over the tiny union ranks globally. The previous formulation evaluated the dot
     products as interpreted higher-order functions over the corpus x
     queries cross join and sorted the full scored set before the partial
     window group limit — both now touch k*queries rows per batch instead.
@@ -63,7 +63,7 @@ def cosine_topk(
     spark = corpus.sparkSession
     qid_t = queries.schema[query_id_col].dataType.simpleString()
     vid_t = corpus.schema[id_col].dataType.simpleString()
-    out_schema = f"query_id {qid_t}, vec_id {vid_t}, cosine double"
+    out_schema = f"query_id {qid_t}, vec_id {vid_t}, cosine double, _nan boolean"
     q_rows = queries.select(
         F.col(query_id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
     ).collect()
@@ -97,74 +97,6 @@ def cosine_topk(
             qn_acc += qv[:, d] * qv[:, d]
         q_groups.append((dim, [m[0] for m in members], qv, np.sqrt(qn_acc)))
 
-    def _topk_batches(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf[id_col].to_numpy()
-            vecs = pdf[vec_col]
-            lens = np.array([-1 if v is None else len(v) for v in vecs])
-            # corpus rows with a NULL ELEMENT inside the vector: the JVM
-            # fold is NULL (Arrow already coerced the None to NaN inside
-            # the array, so it is detected JVM-side — `_hasnull` — not
-            # from the converted values)
-            hasnull = np.array([bool(h) for h in pdf["_hasnull"]])
-            out_q, out_v, out_c = [], [], []
-            for dim, qids, qv, qn in q_groups:
-                if qv is None:
-                    good = np.zeros(len(pdf), dtype=bool)
-                else:
-                    good = (lens == dim) & ~hasnull
-                    if good.any():
-                        cv = np.stack(
-                            [np.asarray(v, dtype=np.float64) for v in vecs[good]]
-                        )
-                        dot = np.zeros((len(cv), len(qids)))
-                        cn_acc = np.zeros(len(cv))
-                        for d in range(dim):
-                            c_d = cv[:, d]
-                            dot += c_d[:, None] * qv[:, d][None, :]
-                            cn_acc += c_d * c_d
-                        cos = dot / (np.sqrt(cn_acc)[:, None] * qn[None, :])
-                        gid = ids[good]
-                        for qi, qid in enumerate(qids):
-                            col = cos[:, qi]
-                            finite = ~np.isnan(col)
-                            ok = np.flatnonzero(finite)
-                            if len(ok) > k:
-                                neg = -col[ok]
-                                kth = np.partition(neg, k - 1)[k - 1]
-                                ok = ok[neg <= kth]  # keep kth-value ties for id tiebreak
-                            keep = sorted(ok, key=lambda i: (-col[i], gid[i]))[:k]
-                            for i in keep:
-                                out_q.append(qid)
-                                out_v.append(gid[i])
-                                out_c.append(float(col[i]))
-                            # NaN scores sort FIRST under Spark's DESC (NaN >
-                            # any double): ship them all; the final window
-                            # applies the exact engine semantics
-                            for i in np.flatnonzero(~finite):
-                                out_q.append(qid)
-                                out_v.append(gid[i])
-                                out_c.append(float(col[i]))
-                # rows whose vector is null / length-mismatched score NULL
-                # (zip_with pads with null in the JVM path); NULLS LAST can
-                # still reach the output when a query has < k scored rows
-                for i in np.flatnonzero(~good):
-                    for qid in qids:
-                        out_q.append(qid)
-                        out_v.append(ids[i])
-                        out_c.append(None)
-            yield pd.DataFrame(
-                {
-                    "query_id": out_q,
-                    "vec_id": out_v,
-                    # object dtype: keeps None as SQL NULL (float64 would
-                    # coerce it to NaN, which sorts on the opposite end)
-                    "cosine": pd.Series(out_c, dtype=object),
-                }
-            )
-
     from ..ops.text import spread_small_input
 
     # a single-file corpus would run the whole kernel on one task
@@ -174,13 +106,103 @@ def cosine_topk(
             vec_col,
             F.exists(F.col(vec_col), lambda x: x.isNull()).alias("_hasnull"),
         )
-    ).mapInPandas(_topk_batches, schema=out_schema)
+    ).mapInPandas(
+        lambda it: _topk_batches(it, q_groups, k, id_col, vec_col), schema=out_schema
+    ).withColumn("cosine", F.when(F.col("_nan"), F.lit(float("nan"))).otherwise(F.col("cosine")))
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
         .select("query_id", "rank", "vec_id", F.round("cosine", 6).alias("cosine"))
     )
+
+
+def _k_smallest_ids(ids, pos, k: int):
+    """The (at most) k positions of `pos` with the smallest ids (non-NULL
+    ids, as the finite-score tiebreak also assumes)."""
+    import numpy as np
+
+    return pos if len(pos) <= k else pos[np.argsort(ids[pos], kind="stable")[:k]]
+
+
+def _topk_batches(batches, q_groups, k: int, id_col: str, vec_col: str):
+    """cosine_topk's per-batch kernel: for each query, the batch's k best
+    finite scores, its k smallest-id NaN-scored rows and its k smallest-id
+    NULL-scored rows. Exact for the final (cosine DESC, vec_id ASC) window:
+    NaN sorts first and NULL last, and within each class ties break on
+    vec_id, so the global top-k draws from these per-batch candidates."""
+    import numpy as np
+    import pandas as pd
+
+    for pdf in batches:
+        if len(pdf) == 0:
+            continue
+        ids = pdf[id_col].to_numpy()
+        vecs = pdf[vec_col]
+        lens = np.array([-1 if v is None else len(v) for v in vecs])
+        # corpus rows with a NULL ELEMENT inside the vector: the JVM
+        # fold is NULL (Arrow already coerced the None to NaN inside
+        # the array, so it is detected JVM-side — `_hasnull` — not
+        # from the converted values)
+        hasnull = np.array([bool(h) for h in pdf["_hasnull"]])
+        out_q, out_v, out_c = [], [], []
+        for dim, qids, qv, qn in q_groups:
+            if qv is None:
+                good = np.zeros(len(pdf), dtype=bool)
+            else:
+                good = (lens == dim) & ~hasnull
+                if good.any():
+                    cv = np.stack(
+                        [np.asarray(v, dtype=np.float64) for v in vecs[good]]
+                    )
+                    dot = np.zeros((len(cv), len(qids)))
+                    cn_acc = np.zeros(len(cv))
+                    for d in range(dim):
+                        c_d = cv[:, d]
+                        dot += c_d[:, None] * qv[:, d][None, :]
+                        cn_acc += c_d * c_d
+                    cos = dot / (np.sqrt(cn_acc)[:, None] * qn[None, :])
+                    gid = ids[good]
+                    for qi, qid in enumerate(qids):
+                        col = cos[:, qi]
+                        finite = ~np.isnan(col)
+                        ok = np.flatnonzero(finite)
+                        if len(ok) > k:
+                            neg = -col[ok]
+                            kth = np.partition(neg, k - 1)[k - 1]
+                            ok = ok[neg <= kth]  # keep kth-value ties for id tiebreak
+                        keep = sorted(ok, key=lambda i: (-col[i], gid[i]))[:k]
+                        for i in keep:
+                            out_q.append(qid)
+                            out_v.append(gid[i])
+                            out_c.append(float(col[i]))
+                        # NaN scores sort FIRST under Spark's DESC (NaN >
+                        # any double), ties on vec_id: the k smallest ids
+                        # are the only NaN rows that can reach the top k
+                        for i in _k_smallest_ids(gid, np.flatnonzero(~finite), k):
+                            out_q.append(qid)
+                            out_v.append(gid[i])
+                            out_c.append(float(col[i]))
+            # rows whose vector is null / length-mismatched score NULL
+            # (zip_with pads with null in the JVM path); NULLS LAST can
+            # still reach the output when a query has < k scored rows,
+            # and then only the k smallest ids
+            for i in _k_smallest_ids(ids, np.flatnonzero(~good), k):
+                for qid in qids:
+                    out_q.append(qid)
+                    out_v.append(ids[i])
+                    out_c.append(None)
+        yield pd.DataFrame(
+            {
+                "query_id": out_q,
+                "vec_id": out_v,
+                # Spark's pandas->Arrow conversion masks NaN as NULL (they
+                # sort on opposite ends), so NaN scores also travel as a
+                # flag that cosine_topk turns back into NaN JVM-side
+                "cosine": pd.Series(out_c, dtype=object),
+                "_nan": [c is not None and c != c for c in out_c],
+            }
+        )
 
 
 def ivf_centroids(
@@ -338,103 +360,6 @@ def rp_lsh_topk(
         )
     )
     q = queries.select(F.col(query_id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv"))
-    scored = cand.join(q, "query_id").withColumn(
-        "cosine", _dot(F.col("cv"), F.col("qv")) / (_norm(F.col("cv")) * _norm(F.col("qv")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", F.round("cosine", 6).alias("cosine"))
-    )
-
-
-def build_ivf_index(
-    corpus: DataFrame,
-    path: str,
-    n_centroids: int = 16,
-    iterations: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Materialize an IVF index: vectors written PARTITIONED BY their
-    nearest-centroid id + a small centroids.json. The index is built once
-    (one clustering + one shuffle); queries then read only their nprobe
-    partitions — at 100-TB corpus scale the scan cost per query batch is
-    nprobe/n_centroids of the table, enforced by parquet partition pruning
-    (asserted in tests)."""
-    import json
-    import os
-
-    cents = ivf_centroids(corpus, n_centroids, id_col, vec_col, iterations)
-    spark = corpus.sparkSession
-    if cents:
-        cdf = spark.createDataFrame(cents, ["cid", "cvec"])
-        assignment = _assign(corpus, cdf, id_col, vec_col)
-        indexed = corpus.join(assignment, id_col)
-    else:  # empty corpus -> a valid empty index
-        indexed = corpus.withColumn("cid", F.lit(0))
-    (
-        indexed.write.mode("overwrite")
-        .partitionBy("cid")
-        .parquet(os.path.join(path, "vectors"))
-    )
-    with open(os.path.join(path, "centroids.json"), "w", encoding="utf-8") as f:
-        json.dump([[cid, list(vec)] for cid, vec in cents], f)
-
-
-def query_ivf_index(
-    spark,
-    path: str,
-    queries: DataFrame,
-    k: int = 10,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-) -> DataFrame:
-    """Top-k against a materialized IVF index. The scan carries a
-    `cid IN (union of probed lists)` partition filter, so only the probed
-    fraction of the index is read; per-query candidate sets are then the
-    (query_id, cid) probe join."""
-    import json
-    import os
-
-    with open(os.path.join(path, "centroids.json"), encoding="utf-8") as f:
-        cents = [(int(cid), [float(x) for x in vec]) for cid, vec in json.load(f)]
-    cdf = spark.createDataFrame(cents, ["cid", "cvec"])
-
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
-    )
-    qc = q.crossJoin(F.broadcast(cdf)).withColumn(
-        "sim", _dot(F.col("qv"), F.col("cvec")) / (_norm(F.col("qv")) * _norm(F.col("cvec")))
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("cid"))
-    # one tiny collect (queries x nprobe rows) serves BOTH the partition
-    # filter and the probe join — re-deriving probes in the join would run
-    # the query-x-centroid scoring plan twice
-    probe_rows = (
-        qc.withColumn("rn", F.row_number().over(wq)).where(F.col("rn") <= nprobe)
-        .select("query_id", "cid").collect()
-    )
-    if not probe_rows:
-        return spark.createDataFrame(
-            [], "query_id long, rank int, vec_id long, cosine double"
-        )
-    probes = spark.createDataFrame(
-        [(r["query_id"], r["cid"]) for r in probe_rows], ["query_id", "cid"]
-    )
-    probe_cids = sorted({r["cid"] for r in probe_rows})
-
-    vectors = spark.read.parquet(os.path.join(path, "vectors")).where(
-        F.col("cid").isin(probe_cids)  # partition-pruned scan
-    )
-    cand = vectors.join(F.broadcast(probes), "cid").select(
-        F.col(id_col).alias("vec_id"),
-        _as_double(F.col(vec_col)).alias("cv"),
-        "query_id",
-    )
     scored = cand.join(q, "query_id").withColumn(
         "cosine", _dot(F.col("cv"), F.col("qv")) / (_norm(F.col("cv")) * _norm(F.col("qv")))
     )

@@ -17,8 +17,8 @@ Re-expression of the reference network and decision semantics:
     inclusive), END_OF_SENTENCE also ending the sentence. The emergency
     split thresholds match unicode_tokenizer.cpp:60-67.
 
-Round 4: the serialized gru_tokenizer_factory format loads and saves
-(load_gru_factory / save_gru_factory), and the RUNTIME is the faithful
+Round 4: the serialized gru_tokenizer_factory format loads
+(load_gru_factory), and the RUNTIME is the faithful
 windowed port (GruTokenizer) — reference-TRAINED tokenizers (built by the
 bundled gru_tokenizer_trainer via morpho_tools gru_train) reproduce the
 reference's own tokenization byte-for-byte on 3,000-sentence streams
@@ -121,10 +121,6 @@ class GruTokenizerNetwork:
         out = (w[:, 1] > w[:, 0]).astype(np.int64)
         out[w[:, 2] > w[np.arange(n), out]] = END_OF_SENTENCE
         return out
-
-
-def _is_space(c: str) -> bool:
-    return c in "\r\t\n" or unicodedata.category(c) == "Zs"
 
 
 class GruTokenizer:
@@ -321,7 +317,7 @@ def demo_network(dim: int = 3) -> GruTokenizerNetwork:
 
 
 # ---------------------------------------------------------------------------
-# serialized gru_tokenizer_factory format (load + save)
+# serialized gru_tokenizer_factory format (load)
 # ---------------------------------------------------------------------------
 # unilib/unicode.h category bit values <-> unicodedata 2-letter names
 _UNILIB_CAT_NAMES = [
@@ -329,8 +325,7 @@ _UNILIB_CAT_NAMES = [
     "Pc", "Pd", "Ps", "Pe", "Pi", "Pf", "Po", "Sm", "Sc", "Sk", "So",
     "Zs", "Zl", "Zp", "Cc", "Cf", "Cs", "Co", "Cn",
 ]
-_CAT_BITS = {name: 1 << i for i, name in enumerate(_UNILIB_CAT_NAMES) if name}
-_BITS_CAT = {v: k for k, v in _CAT_BITS.items()}
+_BITS_CAT = {1 << i: name for i, name in enumerate(_UNILIB_CAT_NAMES) if name}
 
 
 def load_gru_factory(path_or_stream) -> tuple:
@@ -426,300 +421,3 @@ def load_gru_factory(path_or_stream) -> tuple:
             setattr(g, attr, np.asarray(getattr(g, attr), np.float32))
     return net, url_email, segment, allow_spaces
 
-
-def save_gru_factory(network: GruTokenizerNetwork, path: str, url_email: int = 2,
-                     segment: int = 50, allow_spaces: bool = False) -> None:
-    """Inverse of load_gru_factory: writes the version-2 factory stream the
-    reference's tokenizer_factory::load accepts (verified end-to-end by the
-    compiled reference in tests)."""
-    from ..model.binary_writer import _Encoder
-
-    e = _Encoder()
-    e.u1(url_email)
-    e.u2(segment)
-    e.u1(1 if allow_spaces else 0)
-    e.u1(1)  # network version
-    D = network.dim
-    e.u1(D)
-
-    def f32(arr):
-        e.raw(np.asarray(arr, dtype="<f4").tobytes())
-
-    e.u4(len(network.embeddings))
-    for c, v in network.embeddings.items():
-        e.u4(ord(c))
-        f32(v)
-
-    def write_matrix(w, b):
-        for row in np.asarray(w).reshape(len(b) if np.ndim(w) > 1 else 1, -1):
-            f32(row)
-        f32(b)
-
-    for g in (network.gru_fwd, network.gru_bwd):
-        zeros = np.zeros(D, dtype=np.float32)
-        write_matrix(g.X, g.bX)
-        write_matrix(g.X_r, g.bX_r)
-        write_matrix(g.X_z, g.bX_z)
-        write_matrix(g.H, getattr(g, "bH", zeros))
-        write_matrix(g.H_r, getattr(g, "bH_r", zeros))
-        write_matrix(g.H_z, getattr(g, "bH_z", zeros))
-    write_matrix(network.projection_fwd[0], network.projection_fwd[1])
-    write_matrix(network.projection_bwd[0], network.projection_bwd[1])
-    e.u1(len(network.unknown_chars))
-    for name, c in network.unknown_chars.items():
-        e.u4(_CAT_BITS[name])
-        e.u4(ord(c))
-    with open(path, "wb") as f:
-        f.write(bytes([3]))  # tokenizer_ids::GRU
-        f.write(bytes([2]))  # gru_tokenizer_factory version
-        f.write(e.blob())
-
-
-# ---------------------------------------------------------------------------
-# trainer (gru_tokenizer_network_trainer.h re-expressed in numpy)
-# ---------------------------------------------------------------------------
-class _AdamMat:
-    """Per-matrix Adam state (matrix_trainer, trainer header :45-52,361-378):
-    gradient buffers accumulated over a batch, momentum/velocity with the
-    reference's constants, bias-corrected learning rate applied by caller."""
-
-    def __init__(self, w, b):
-        self.w = w
-        self.b = b
-        self.w_g = np.zeros_like(w)
-        self.b_g = np.zeros_like(b)
-        self.w_m = np.zeros_like(w)
-        self.b_m = np.zeros_like(b)
-        self.w_v = np.zeros_like(w)
-        self.b_v = np.zeros_like(b)
-
-    def update(self, lr):
-        for g, m, v, p in ((self.w_g, self.w_m, self.w_v, self.w),
-                           (self.b_g, self.b_m, self.b_v, self.b)):
-            m *= 0.9
-            m += 0.1 * g
-            v *= 0.999
-            v += 0.001 * g * g
-            p += lr * m / (np.sqrt(v) + 1e-8)
-            g[:] = 0
-
-
-def train_gru_tokenizer(data, dim=16, segment=50, allow_spaces=False,
-                        epochs=5, batch_size=10, learning_rate=0.005,
-                        learning_rate_final=0.001, dropout=0.0,
-                        initialization_range=0.1, seed=42,
-                        instances_per_epoch=10000, verbose=False):
-    """Train a GRU tokenizer network (gru_tokenizer_network_trainer.h
-    re-expressed: the same instance windowing over the shuffled sentence
-    stream, bidirectional GRU forward/backward passes, per-batch Adam with
-    the reference's constants and bias correction, exp-interpolated
-    learning-rate schedule, and the per-category unknown-char table built
-    from training counts). RNG parity with std::mt19937 is NOT attempted —
-    the produced factory file is validated by the compiled reference
-    loading it and tokenizing identically to this runtime.
-
-    data: list of (sentence_text, [(tok_start, tok_len), ...]).
-    Returns GruTokenizerNetwork (save with save_gru_factory).
-    """
-    rng = np.random.default_rng(seed)
-    f32 = np.float32
-
-    def uniform(shape):
-        return rng.uniform(-initialization_range, initialization_range, shape).astype(f32)
-
-    # embeddings for every training char
-    chars_seen = sorted({c for text, _t in data for c in text})
-    emb = {c: _AdamMat(uniform(dim), np.zeros(0, f32)) for c in chars_seen}
-
-    def make_gru():
-        g = Gru(dim)
-        mats = {}
-        for name, bias in (("X", 0.0), ("X_r", 1.0), ("X_z", 1.0),
-                           ("H", 0.0), ("H_r", 1.0), ("H_z", 1.0)):
-            m = _AdamMat(uniform((dim, dim)), np.full(dim, bias, f32))
-            mats[name] = m
-        g.X, g.bX = mats["X"].w, mats["X"].b
-        g.X_r, g.bX_r = mats["X_r"].w, mats["X_r"].b
-        g.X_z, g.bX_z = mats["X_z"].w, mats["X_z"].b
-        g.H, g.H_r, g.H_z = mats["H"].w, mats["H_r"].w, mats["H_z"].w
-        g.bH, g.bH_r, g.bH_z = mats["H"].b, mats["H_r"].b, mats["H_z"].b
-        return g, mats
-
-    gru_fwd, fwd_mats = make_gru()
-    gru_bwd, bwd_mats = make_gru()
-    proj_fwd = _AdamMat(uniform((3, dim)), np.zeros(3, f32))
-    proj_bwd = _AdamMat(uniform((3, dim)), np.zeros(3, f32))
-    proj_fwd.b[NO_SPLIT] = 1.0
-    proj_bwd.b[NO_SPLIT] = 1.0  # reference sets both; only fwd's is read
-
-    drop_mult = 1.0 / (1.0 - dropout) if dropout else 1.0
-
-    # training stream: shuffled sentences, outcomes on token-final chars
-    def build_stream():
-        order = rng.permutation(len(data))
-        in_chars = []
-        out = []
-        for idx in order:
-            text, tokens = data[idx]
-            if not tokens:
-                continue
-            base = len(in_chars)
-            in_chars.extend(text)
-            out.extend([NO_SPLIT] * len(text))
-            for ti, (ts, tl) in enumerate(tokens):
-                out[base + ts + tl - 1] = (
-                    END_OF_TOKEN if ti + 1 < len(tokens) else END_OF_SENTENCE
-                )
-        return in_chars, out
-
-    lr = learning_rate
-    b1t = b2t = 1.0
-    stream_chars, stream_out = build_stream()
-    offset = 0
-    for epoch in range(epochs):
-        logprob = 0.0
-        total = correct = 0
-        for instance in range(instances_per_epoch):
-            if offset + segment >= len(stream_chars):
-                stream_chars, stream_out = build_stream()
-                offset = 0
-            chars = stream_chars[offset : offset + segment]
-            gold = stream_out[offset : offset + segment]
-            # shift to a suitable break (trainer :160-163)
-            shift = segment - 5
-            while shift > segment // 2:
-                if gold[shift - 1] != NO_SPLIT or chars[shift - 1] == " ":
-                    break
-                shift -= 1
-            offset += shift
-
-            E = np.stack([emb[c].w for c in chars])
-            e_drop = (
-                (rng.random((segment, dim)) >= dropout).astype(f32) * drop_mult
-                if dropout
-                else np.ones((segment, dim), f32)
-            )
-            Ed = E * e_drop
-            w = np.tile(proj_fwd.b, (segment, 1))
-
-            caches = []
-            for direction in (0, 1):
-                g = gru_fwd if direction == 0 else gru_bwd
-                pw = proj_fwd.w if direction == 0 else proj_bwd.w
-                idxs = range(segment) if direction == 0 else range(segment - 1, -1, -1)
-                states = [np.zeros(dim, f32)]
-                updates = []
-                resets = []
-                resetstates = []
-                cands = []
-                drops = []
-                for i in idxs:
-                    e = Ed[i]
-                    st = states[-1]
-                    z = _sigmoid(g.bX_z + g.X_z @ e + g.H_z @ st)
-                    r = _sigmoid(g.bX_r + g.X_r @ e + g.H_r @ st)
-                    rs = r * st
-                    c = np.tanh(g.bX + g.X @ e + g.H @ rs)
-                    ns = z * st + (1 - z) * c
-                    d = (
-                        ((rng.random(dim) >= dropout).astype(f32) * drop_mult * ns)
-                        if dropout
-                        else ns
-                    )
-                    states.append(ns)
-                    updates.append(z)
-                    resets.append(r)
-                    resetstates.append(rs)
-                    cands.append(c)
-                    drops.append(d)
-                    w[i] += pw @ d
-                caches.append((states, updates, resets, resetstates, cands, drops))
-
-            # softmax + loss
-            w -= w.max(axis=1, keepdims=True)
-            np.exp(w, out=w)
-            w /= w.sum(axis=1, keepdims=True)
-            gold_arr = np.asarray(gold)
-            total += segment
-            correct += int((w.argmax(axis=1) == gold_arr).sum())
-            logprob += float(np.log(w[np.arange(segment), gold_arr] + 1e-30).sum())
-            err = -w
-            err[np.arange(segment), gold_arr] += 1.0
-
-            for direction in (0, 1):
-                g = gru_fwd if direction == 0 else gru_bwd
-                mats = fwd_mats if direction == 0 else bwd_mats
-                proj = proj_fwd if direction == 0 else proj_bwd
-                states, updates, resets, resetstates, cands, drops = caches[direction]
-                state_g = np.zeros(dim, f32)
-                for k in range(segment - 1, -1, -1):
-                    i = k if direction == 0 else segment - 1 - k
-                    e = Ed[i]
-                    o = err[i]
-                    proj.w_g += np.outer(o, drops[k])
-                    # only positions that survived dropout propagate
-                    live = drops[k] != 0
-                    state_g = state_g + np.where(live, proj.w.T @ o, 0.0)
-
-                    update_g = state_g * (states[k] - cands[k])
-                    cand_g = state_g * (1 - updates[k])
-                    state_g = state_g * updates[k]
-
-                    cand_g = cand_g * (1 - cands[k] * cands[k])
-                    mats["X"].b_g += cand_g
-                    mats["X"].w_g += np.outer(cand_g, e)
-                    mats["H"].w_g += np.outer(cand_g, resetstates[k])
-                    emb[chars[i]].w_g += e_drop[i] * (g.X.T @ cand_g)
-                    resetstate_g = g.H.T @ cand_g
-
-                    state_g = state_g + resetstate_g * resets[k]
-                    reset_g = resetstate_g * states[k]
-                    update_g = update_g * updates[k] * (1 - updates[k])
-                    reset_g = reset_g * resets[k] * (1 - resets[k])
-                    mats["X_z"].b_g += update_g
-                    mats["X_r"].b_g += reset_g
-                    mats["X_z"].w_g += np.outer(update_g, e)
-                    mats["H_z"].w_g += np.outer(update_g, states[k])
-                    mats["X_r"].w_g += np.outer(reset_g, e)
-                    mats["H_r"].w_g += np.outer(reset_g, states[k])
-                    emb[chars[i]].w_g += e_drop[i] * (
-                        g.X_z.T @ update_g + g.X_r.T @ reset_g
-                    )
-                    state_g = state_g + g.H_z.T @ update_g + g.H_r.T @ reset_g
-
-            if (instance + 1) % batch_size == 0 or instance + 1 == instances_per_epoch:
-                b1t *= 0.9
-                b2t *= 0.999
-                lr_b = lr * np.sqrt(1 - b2t) / (1 - b1t)
-                for m in emb.values():
-                    m.update(lr_b)
-                for mats in (fwd_mats, bwd_mats):
-                    for m in mats.values():
-                        m.update(lr_b)
-                proj_fwd.update(lr_b)
-                proj_bwd.update(lr_b)
-        if learning_rate_final and learning_rate_final != learning_rate and epochs > 1:
-            lr = float(np.exp(((epochs - epoch - 2) * np.log(learning_rate)
-                               + (epoch + 1) * np.log(learning_rate_final)) / (epochs - 1)))
-        if verbose:
-            print(f"epoch {epoch + 1}: logprob {logprob:.1f} acc {100.0 * correct / total:.2f}%")
-
-    # per-category unknown chars from training counts (gru_tokenizer_trainer.cpp:55-75)
-    counts: dict = {}
-    for text, _t in data:
-        for c in text:
-            cat = unicodedata.category(c)
-            counts.setdefault(cat, {}).setdefault(c, 0)
-            counts[cat][c] += 1
-    unknown = {
-        cat: max(cc.items(), key=lambda kv: kv[1])[0] for cat, cc in counts.items()
-    }
-    return GruTokenizerNetwork(
-        dim,
-        {c: m.w for c, m in emb.items()},
-        gru_fwd,
-        gru_bwd,
-        (proj_fwd.w, proj_fwd.b),
-        (proj_bwd.w, proj_bwd.b),
-        unknown,
-    )

@@ -163,79 +163,6 @@ def test_reference_trained_gru_parity_czech_allow_spaces():
         assert mine == f.read()
 
 
-def test_gru_factory_roundtrip():
-    """save_gru_factory(load_gru_factory(x)) keeps classification behavior
-    (H biases are format ballast the runtime never reads)."""
-    import tempfile
-
-    net, u, segment, allow_spaces = load_gru_factory(os.path.join(FIX, "tiny_gru.tokenizer"))
-    with tempfile.NamedTemporaryFile(suffix=".tokenizer") as tmp:
-        from nametag_spark.tokenizer.gru import save_gru_factory
-
-        save_gru_factory(net, tmp.name, url_email=u, segment=segment, allow_spaces=allow_spaces)
-        net2, u2, s2, a2 = load_gru_factory(tmp.name)
-    assert (u2, s2, a2) == (u, segment, allow_spaces)
-    text = _stream("md")[:2000]
-    t1 = GruTokenizer(net, segment=segment, allow_spaces=allow_spaces).tokenize(text)
-    t2 = GruTokenizer(net2, segment=s2, allow_spaces=a2).tokenize(text)
-    assert t1 == t2
-
-
-def test_train_gru_tokenizer_end_to_end(tmp_path):
-    """T8 trainer: train a small GRU tokenizer with the numpy trainer,
-    check heldout token F1, save it in the reference factory format, and
-    (when the compiled reference is available) verify the reference loads
-    the file and tokenizes byte-identically to this runtime."""
-    import subprocess
-
-    from scripts.gen_ner_fuzz import sentences
-    from nametag_spark.tokenizer.gru import save_gru_factory, train_gru_tokenizer
-
-    all_sents = sentences("md", 900)
-    def as_data(sents):
-        out = []
-        for s in sents:
-            text = " ".join(s)
-            toks = []
-            pos = 0
-            for t in s:
-                toks.append((pos, len(t)))
-                pos += len(t) + 1
-            out.append((text, toks))
-        return out
-
-    net = train_gru_tokenizer(as_data(all_sents[:700]), dim=16, segment=50,
-                              epochs=2, batch_size=10, instances_per_epoch=1500,
-                              seed=7)
-    tok = GruTokenizer(net, segment=50)
-    tp = fp = fn = 0
-    for text, gold_toks in as_data(all_sents[700:]):
-        gold = set(gold_toks)
-        got = {sp for sent in tok.tokenize(text) for sp in sent}
-        tp += len(got & gold)
-        fp += len(got - gold)
-        fn += len(gold - got)
-    f1 = 2 * tp / (2 * tp + fp + fn)
-    assert f1 >= 0.95, f1
-
-    path = str(tmp_path / "trained.tokenizer")
-    save_gru_factory(net, path, segment=50, allow_spaces=False)
-    net2, _u, seg2, allow2 = load_gru_factory(path)
-    text = " ".join(" ".join(s) for s in all_sents[700:720])
-    ours = GruTokenizer(net2, segment=seg2, allow_spaces=allow2).tokenize(text)
-    assert ours == tok.tokenize(text)
-
-    ref = "/tmp/refbuild/morpho_tools"
-    if os.path.exists(ref):
-        r = subprocess.run([ref, "gru_tokenize", path], input=text.encode(),
-                           capture_output=True)
-        assert r.returncode == 0, r.stderr.decode()
-        mine = "".join(
-            "".join(text[a : a + b] + "\n" for (a, b) in s) + "\n" for s in ours
-        )
-        assert mine == r.stdout.decode()
-
-
 def test_gru_spec_in_tokenize_df(spark):
     """The DataFrame surface accepts lang='gru:<file>': tokenize_df runs a
     trained GRU tokenizer inside mapInPandas (factory loaded once per

@@ -1,19 +1,10 @@
-"""Structured Streaming tests: streaming NER == batch NER, watermarked
-windows, stateful dedup, checkpointed resume."""
-
-import os
+"""Structured Streaming tests: the incremental KG over a transcript stream
+equals the batch pipeline, including across a checkpointed restart."""
 
 import pytest
 
 from nametag_spark.data.synth import synth_transcripts
-from nametag_spark.ner.pipeline import recognize_df
-from nametag_spark.streaming.stream import (
-    dedup_turns_stateful,
-    read_transcript_stream,
-    recognize_stream,
-    run_stream_to_parquet,
-    windowed_mention_counts,
-)
+from nametag_spark.streaming.stream import read_transcript_stream
 
 
 def incremental_triples(spark, model_dir, out_dir, config=None):
@@ -33,81 +24,7 @@ def stream_src(spark, tmp_path_factory):
     sdf = spark.createDataFrame(tdf)
     # several files so maxFilesPerTrigger produces multiple micro-batches
     sdf.repartition(4).write.mode("overwrite").parquet(src)
-    return src, tdf, str(base)
-
-
-def test_streaming_mentions_match_batch(spark, tiny_model_dir, stream_src):
-    src, tdf, base = stream_src
-    stream = read_transcript_stream(spark, src, max_files_per_trigger=2)
-    mentions = recognize_stream(stream, tiny_model_dir)
-    out = os.path.join(base, "mentions_out")
-    ckpt = os.path.join(base, "mentions_ckpt")
-    q = run_stream_to_parquet(mentions, out, ckpt)
-    q.awaitTermination(120)
-
-    got = spark.read.parquet(out).toPandas()
-    batch = recognize_df(
-        spark.createDataFrame(tdf), tiny_model_dir, passthrough=("role", "tool", "ts")
-    ).toPandas()
-    key = ["conv_id", "turn_idx", "sent_idx", "tok_start", "tok_len", "type"]
-    assert sorted(map(tuple, got[key].values.tolist())) == sorted(
-        map(tuple, batch[key].values.tolist())
-    )
-    assert "ts" in got.columns and got["ts"].notna().all()
-
-
-def test_windowed_counts_with_watermark(spark, tiny_model_dir, stream_src):
-    src, tdf, base = stream_src
-    stream = read_transcript_stream(spark, src)
-    mentions = recognize_stream(stream, tiny_model_dir)
-    counts = windowed_mention_counts(mentions, window="10 minutes", watermark="5 minutes")
-    out = os.path.join(base, "counts_out")
-    ckpt = os.path.join(base, "counts_ckpt")
-    q = run_stream_to_parquet(counts, out, ckpt)
-    q.awaitTermination(120)
-    got = spark.read.parquet(out)
-    # append-mode emits only windows closed by the watermark; with
-    # availableNow the final watermark closes all but the last window(s)
-    assert {"window_start", "window_end", "type", "n_mentions"} <= set(got.columns)
-
-
-def test_stateful_dedup(spark, stream_src, tmp_path):
-    src, tdf, base = stream_src
-    # duplicate the source: every turn appears twice across micro-batches
-    dup_src = str(tmp_path / "dup_src")
-    sdf = spark.createDataFrame(tdf)
-    sdf.union(sdf).repartition(6).write.mode("overwrite").parquet(dup_src)
-
-    stream = read_transcript_stream(spark, dup_src, max_files_per_trigger=2)
-    deduped = dedup_turns_stateful(stream)
-    out = str(tmp_path / "dedup_out")
-    ckpt = str(tmp_path / "dedup_ckpt")
-    q = run_stream_to_parquet(deduped, out, ckpt)
-    q.awaitTermination(180)
-
-    got = spark.read.parquet(out).toPandas()
-    # exactly one row per distinct (conv_id, text)
-    distinct_inputs = tdf.drop_duplicates(subset=["conv_id", "text"])
-    assert len(got.drop_duplicates(subset=["conv_id", "text"])) == len(got)
-    assert len(got) == len(distinct_inputs)
-
-
-def test_stream_resume_from_checkpoint(spark, tiny_model_dir, stream_src, tmp_path):
-    src, tdf, base = stream_src
-    out = str(tmp_path / "resume_out")
-    ckpt = str(tmp_path / "resume_ckpt")
-    stream = read_transcript_stream(spark, src, max_files_per_trigger=2)
-    mentions = recognize_stream(stream, tiny_model_dir)
-    q = run_stream_to_parquet(mentions, out, ckpt)
-    q.awaitTermination(120)
-    n1 = spark.read.parquet(out).count()
-
-    # restart with the same checkpoint: no new input -> no duplicate output
-    q2 = run_stream_to_parquet(
-        recognize_stream(read_transcript_stream(spark, src), tiny_model_dir), out, ckpt
-    )
-    q2.awaitTermination(120)
-    assert spark.read.parquet(out).count() == n1
+    return src, tdf
 
 
 def test_incremental_kg_matches_batch(spark, tiny_model_dir, stream_src, tmp_path):
@@ -119,7 +36,7 @@ def test_incremental_kg_matches_batch(spark, tiny_model_dir, stream_src, tmp_pat
     from nametag_spark.ner.pipeline import recognize_df
     from nametag_spark.streaming.stream import run_incremental_kg
 
-    src, tdf, _base = stream_src
+    src, tdf = stream_src
     out_dir = str(tmp_path / "kg")
     ckpt = str(tmp_path / "kg_ckpt")
 
