@@ -380,97 +380,40 @@ def kg_stage_breakdown(cores: int, model_dir: str, paths: list) -> list:
 
 
 def widevocab_surface_stats(corpus_path: str, model_dir: str) -> dict:
-    """Distinct-surface and capped-bucket counts for the wide-vocab corpus
-    at resolve_entities' default LSH parameters — evidence that growing the
-    surface vocabulary does not blow past the oversized-bucket cap."""
+    """Distinct-surface and bucket counts for the wide-vocab corpus at
+    resolve_entities' default LSH parameters — evidence that growing the
+    surface vocabulary does not blow past the oversized-bucket cap. Bucket
+    counts come from lsh_bucket_histogram, i.e. the resolution kernel's own
+    policy over (type, band, sig) buckets: pre-policy sizes from an
+    uncapped call, split/dropped counts and the post-policy histogram from
+    the capped one."""
     from pyspark.sql import functions as F
 
-    from nametag_spark.kg.resolution import (
-        canonicalize_mentions,
-        minhash_signatures,
-    )
+    from nametag_spark.kg.resolution import canonicalize_mentions, lsh_bucket_histogram
     from nametag_spark.ner.pipeline import recognize_df
 
     spark = make_spark(CPUS)
     try:
         df = spark.read.parquet(corpus_path).repartition(CPUS).persist()
         mentions = recognize_df(df, model_dir)
-        m = canonicalize_mentions(mentions).where(F.length("norm") > 0)
-        surfaces = m.groupBy("type", "norm").count()
-        # mirror resolve_entities' banding exactly: shingles over the norm,
-        # type as a hard blocking column on the bucket key
-        sig = minhash_signatures(
-            surfaces.selectExpr("concat(type, '\\t', norm) AS key", "norm AS key_text"),
-            "key_text",
-            "key",
-            n_hashes=12,
-            k=3,
-        ).withColumn("type", F.split(F.col("key"), "\\t")[0])
-        rows = 12 // 4
-        band_cols = [
-            F.md5(F.concat_ws("_", *[F.col(f"mh{h}").cast("string") for h in range(b * rows, (b + 1) * rows)]))
-            for b in range(4)
-        ]
-        half = 6
-        sub1 = F.md5(F.concat_ws("_", *[F.col(f"mh{h}").cast("string") for h in range(half)]))
-        sub2 = F.md5(F.concat_ws("_", *[F.col(f"mh{h}").cast("string") for h in range(half, 12)]))
-        buckets = sig.select(
-            "type", sub1.alias("_s1"), sub2.alias("_s2"), F.explode(F.array(*band_cols)).alias("sig")
-        ).persist()
-        sizes = buckets.groupBy("type", "sig").count().persist()
-        n_surf = surfaces.count()
-        agg = sizes.agg(
-            F.count(F.lit(1)).alias("n_buckets"),
-            F.sum((F.col("count") > 200).cast("int")).alias("oversized"),
-            F.max("count").alias("max_bucket_size"),
-        ).collect()[0]
-        # post-split residue: sub-buckets of the oversized set still > cap
-        # (these are what the split/cap policy actually DROPS)
-        oversized_keys = sizes.where(F.col("count") > 200).select("type", "sig")
-        split = buckets.join(F.broadcast(oversized_keys), ["type", "sig"], "left_semi").select(
-            "type",
-            F.explode(
-                F.array(
-                    F.concat(F.col("sig"), F.lit("#1:"), F.col("_s1")),
-                    F.concat(F.col("sig"), F.lit("#2:"), F.col("_s2")),
-                )
-            ).alias("sig"),
-        )
-        agg2 = (
-            split.groupBy("type", "sig")
+        surfaces = (
+            canonicalize_mentions(mentions)
+            .where(F.length("norm") > 0)
+            .groupBy("type", "norm")
             .count()
-            .agg(
-                F.sum((F.col("count") > 200).cast("int")).alias("dropped"),
-                F.max("count").alias("max_after_split"),
-            )
-            .collect()[0]
+            .selectExpr("concat(type, '\\t', norm) AS k", "norm", "type")
+            .persist()
         )
-        buckets.unpersist()
-        sizes.unpersist()
-        # post-policy histogram from the library's OWN banding pipeline
-        # (_banded_bucket_frames via lsh_bucket_histogram) — the round-5
-        # verdict #3 evidence that the cap, not the policy, bounds the
-        # in-bucket join mass
-        from nametag_spark.kg.resolution import lsh_bucket_histogram, release_persisted
-
-        hist = lsh_bucket_histogram(
-            surfaces.selectExpr("concat(type, '\\t', norm) AS k", "norm", "type"),
-            "norm",
-            "k",
-            n_hashes=12,
-            bands=4,
-            k=3,
-            max_bucket=200,
-            block_col="type",
-        )
-        release_persisted()
+        n_surf = surfaces.count()
+        kw = dict(n_hashes=12, bands=4, k=3, block_col="type")
+        uncapped = lsh_bucket_histogram(surfaces, "norm", "k", max_bucket=10**9, **kw)
+        hist = lsh_bucket_histogram(surfaces, "norm", "k", max_bucket=200, **kw)
         return {
             "n_surfaces": n_surf,
-            "n_buckets": int(agg["n_buckets"]),
-            "oversized_split_buckets": int(agg["oversized"] or 0),
-            "max_bucket_size": int(agg["max_bucket_size"] or 0),
-            "dropped_after_split": int(agg2["dropped"] or 0),
-            "max_bucket_after_split": int(agg2["max_after_split"] or 0),
+            "n_buckets": uncapped["n_buckets"],
+            "oversized_split_buckets": hist["split_buckets"],
+            "max_bucket_size": uncapped["max_bucket_size"],
+            "dropped_after_split": hist["dropped_buckets"],
             "post_policy": hist,
         }
     finally:

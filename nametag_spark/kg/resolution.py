@@ -7,9 +7,10 @@ table. Each operator has one production implementation:
   - blocking (lsh_similarity_edges): per-surface minhash signatures as
     array transforms, band keys, ONE hash exchange on the bucket key, then
     a partition-local Arrow/numpy bucket kernel (_make_bucket_pair_kernel)
-    that applies the oversized-bucket split/cap policy and the exact
-    distinct-shingle Jaccard verify. The cap is a parameter and oversized
-    buckets are split before anything is dropped.
+    that applies the bucket policy (_bucket_policy: oversized buckets are
+    split before anything is dropped) and the exact distinct-shingle
+    Jaccard verify. lsh_bucket_histogram reports the same policy's bucket
+    sizes.
   - connected components (connected_components): three routes chosen by
     observed size only — driver collect, driver streaming, or the
     distributed alternating large-star/small-star rounds (Kiveris et al.,
@@ -18,11 +19,11 @@ table. Each operator has one production implementation:
     shared by resolve_entities, the graph builder and streaming
     compaction.
 
-The declarative explode -> groupBy(band) -> within-bucket self-join
-formulation (_banded_bucket_frames, lsh_candidate_pairs, jaccard_filter)
-and minhash_signatures remain as parity references: tests and the DuckDB
-oracles compare the kernels against them. minhash uses md5-derived 64-bit
-integer hashes (the same function exists in DuckDB, which makes the op
+The declarative minhash_signatures and jaccard_filter stay because the
+DuckDB oracles and minhash_dup_pairs read them; the declarative banding
+and self-join references for the bucket kernel live in
+tests/reference_impls.py. minhash uses md5-derived 64-bit integer hashes
+(the same function exists in DuckDB, which makes the op
 oracle-checkable).
 """
 
@@ -247,137 +248,6 @@ def _band_columns(n_hashes: int, bands: int) -> list:
     return cols
 
 
-def _banded_bucket_frames(
-    sig: DataFrame, carry: list, n_hashes: int, bands: int, max_bucket: int,
-    block_cols=(),
-) -> list:
-    """Shared LSH banding: signature rows (mh0..mh{n-1} + carry columns) ->
-    TWO frames of (*carry, band, sig) bucket rows — [normal buckets,
-    split-bucket residue] — with oversized buckets SPLIT, then capped.
-
-    A bucket larger than max_bucket would make the downstream self-join
-    quadratic. Populations with long shared substrings (email domains,
-    name morphemes) produce such buckets SYSTEMATICALLY at scale — a few
-    percent of rows land in buckets whose band minima come entirely from
-    the shared shingles — so dropping them wholesale costs real recall.
-    Instead, members of an oversized bucket are re-keyed by two sub-band
-    signatures over the FULL n-hash signature (rows 0..n/2 and n/2..n):
-    high-similarity pairs survive with probability 1-(1-J^(n/2))^2 while
-    the degenerate bucket fragments. Sub-buckets still over the cap are
-    dropped (logged by bench's widevocab stats).
-
-    Physical plan (optimization round 8): bucket rows are hash-repartitioned
-    ONCE on the bucket key — explicitly, because the downstream verify
-    stage is CPU-dense relative to its byte size and a planner-inserted
-    exchange gets coalesced by AQE on bytes alone (measured 4 tasks /
-    0.98s straggler on a stage with 2.6s of intersect CPU at sf0.1); the
-    explicit count (default spark.sparkContext.defaultParallelism, conf
-    `spark.nametag.lsh.bucketPartitions`) scales with the cluster. The
-    oversized-bucket sets are keys-only aggregates computed FROM that
-    same exchange (co-partitioned groupBy: no second exchange, payload
-    columns pruned) and joined back as broadcast anti/semi probes, so the
-    heavy shingle-payload rows are shuffled once and never re-sorted for
-    size accounting (a window-count variant measured 20-30% SLOWER at
-    240k surfaces — it re-sorts the payload per branch). Both branch
-    plans are always present and lazy: AQE executes the split side as
-    near-empty broadcast stages when no bucket is oversized, replacing
-    the previous persist + EAGER oversized count that blocked the driver
-    mid-plan and cached the payload rows. The two frames stay SEPARATE —
-    the anti-join preserves the streamed side's partitioning, so each
-    frame self-joins with NO further exchange (a union would discard it).
-    Bucket membership, and therefore the candidate-pair set, is identical
-    to the old policy.
-
-    Since the r8 kernel rewrite this declarative machinery is OFF the hot
-    paths: lsh_similarity_edges and minhash_dup_pairs run the same
-    banding/split/cap policy partition-locally in
-    _make_bucket_pair_kernel, and this definition remains for the staged
-    reference path (lsh_candidate_pairs) and keys-only diagnostics
-    (lsh_bucket_histogram). The two implementations of the policy are
-    held together by the staged-reference parity test
-    (tests/test_ops.py::test_minhash_dup_pairs_matches_staged_reference),
-    which drives candidate membership through BOTH and must stay green
-    after any policy change."""
-    band_cols = _band_columns(n_hashes, bands)
-    half = n_hashes // 2
-    sub1 = F.md5(F.concat_ws("_", *[F.col(f"mh{h}").cast("string") for h in range(half)]))
-    sub2 = F.md5(F.concat_ws("_", *[F.col(f"mh{h}").cast("string") for h in range(half, n_hashes)]))
-    buckets = sig.select(
-        *carry, sub1.alias("_s1"), sub2.alias("_s2"), F.explode(F.array(*band_cols)).alias("bk")
-    ).select(*carry, "_s1", "_s2", F.col("bk.band").alias("band"), F.col("bk.sig").alias("sig"))
-    spark = sig.sparkSession
-    n_part = int(spark.conf.get("spark.nametag.lsh.bucketPartitions", "0") or 0)
-    if n_part <= 0:
-        n_part = spark.sparkContext.defaultParallelism
-    bucket_key = list(block_cols) + ["band", "sig"]
-    # persist the repartitioned bucket rows: the exchange alone is not
-    # enough — every consumer stage (size aggregate, anti/semi probes,
-    # each self-join side) would re-deserialize the full payload shuffle,
-    # measured ~1.5x slower at 240k surfaces; the columnar cache makes
-    # those reads cheap. Registered for release_persisted(). Lazy (no
-    # eager count): it materializes inside the first downstream job.
-    buckets = buckets.repartition(n_part, *bucket_key).persist()
-    _register_persisted(buckets)
-    oversized = (
-        buckets.groupBy(*bucket_key).count().where(F.col("count") > max_bucket).select(*bucket_key)
-    )
-    ok = buckets.join(F.broadcast(oversized), bucket_key, "left_anti").drop("_s1", "_s2")
-    split = (
-        buckets.join(F.broadcast(oversized), bucket_key, "left_semi")
-        .select(
-            *carry,
-            "band",
-            F.explode(
-                F.array(
-                    F.concat(F.col("sig"), F.lit("#1:"), F.col("_s1")),
-                    F.concat(F.col("sig"), F.lit("#2:"), F.col("_s2")),
-                )
-            ).alias("sig"),
-        )
-    )
-    still_over = (
-        split.groupBy(*bucket_key).count().where(F.col("count") > max_bucket).select(*bucket_key)
-    )
-    # re-keying replaced `sig`, so the split residue lost the bucket
-    # partitioning; pin its self-join exchange at full parallelism too
-    # (its verify is as CPU-dense per byte as the main branch's)
-    split_ok = split.join(F.broadcast(still_over), bucket_key, "left_anti").repartition(
-        n_part, *bucket_key
-    )
-    return [ok, split_ok]
-
-
-def lsh_candidate_pairs(
-    df: DataFrame,
-    text_col: str,
-    key_col: str,
-    n_hashes: int = 12,
-    bands: int = 4,
-    k: int = 3,
-    max_bucket: int = 200,
-) -> DataFrame:
-    """Candidate pairs (a, b) with a < b sharing at least one LSH band.
-
-    bands divide the signature into n_hashes/bands rows each; a pair of keys
-    collides if any band hashes equal.
-    """
-    sig = minhash_signatures(df, text_col, key_col, n_hashes, k)
-    frames = _banded_bucket_frames(sig, [key_col], n_hashes, bands, max_bucket)
-    parts = []
-    for ok in frames:
-        left = ok.alias("l")
-        right = ok.alias("r")
-        parts.append(
-            left.join(
-                right,
-                (F.col("l.band") == F.col("r.band"))
-                & (F.col("l.sig") == F.col("r.sig"))
-                & (F.col(f"l.{key_col}") < F.col(f"r.{key_col}")),
-            ).select(F.col(f"l.{key_col}").alias("a"), F.col(f"r.{key_col}").alias("b"))
-        )
-    return parts[0].unionByName(parts[1]).distinct()
-
-
 def _signatures(
     df: DataFrame, text_col: str, key_col: str, n_hashes: int, k: int, block_col: str | None
 ) -> DataFrame:
@@ -402,6 +272,61 @@ def _signatures(
     return src.select(*names, "_sh", *mins)
 
 
+def _partition_frame(batches):
+    """One partition's pandas batches as a single frame (None if empty)."""
+    import pandas as pd
+
+    pdfs = [p for p in batches if len(p)]
+    if not pdfs:
+        return None
+    return pdfs[0] if len(pdfs) == 1 else pd.concat(pdfs, ignore_index=True)
+
+
+def _bucket_policy(pdf, has_blk: bool, mh, n_hashes: int, max_bucket: int, stats: dict):
+    """THE bucket policy of minhash-LSH blocking over one partition's bucket
+    rows (co-partitioned by the bucket key, so every bucket is whole here):
+    group on (_blk, band, sig); re-key each bucket over max_bucket under
+    BOTH half-signature tuples (mh[:n/2] and mh[n/2:]); drop sub-buckets
+    still over it. Long shared substrings (email domains, name morphemes)
+    make oversized buckets systematically; the split keeps high-similarity
+    pairs with probability 1-(1-J^(n/2))^2 while the bucket fragments.
+
+    Yields each post-policy bucket's row positions, singletons included;
+    counts buckets split in stats["split"] and sub-buckets dropped in
+    stats["dropped"]. mh: per-row arrays whose first n_hashes entries are
+    mh0..mh{n_hashes-1}."""
+    import numpy as np
+
+    bandv = pdf["band"].to_numpy()
+    sigv = pdf["sig"].to_numpy()
+    if has_blk:
+        blkv = pdf["_blk"].to_numpy()
+        keys = np.array(
+            [f"{x}\x00{b}\x00{s}" for x, b, s in zip(blkv, bandv, sigv)], dtype=object
+        )
+    else:
+        keys = np.array([f"{b}\x00{s}" for b, s in zip(bandv, sigv)], dtype=object)
+    uniq, inv = np.unique(keys, return_inverse=True)
+    order = np.argsort(inv, kind="stable")
+    bounds = np.searchsorted(inv[order], np.arange(len(uniq) + 1))
+    half = n_hashes // 2
+    for g in range(len(uniq)):
+        idx = order[bounds[g] : bounds[g + 1]]
+        if len(idx) <= max_bucket:
+            yield idx
+            continue
+        stats["split"] += 1
+        for sl in (slice(0, half), slice(half, n_hashes)):
+            sub: dict = {}
+            for i in idx:
+                sub.setdefault(np.asarray(mh[i], dtype=np.int64)[sl].tobytes(), []).append(i)
+            for members in sub.values():
+                if len(members) <= max_bucket:
+                    yield np.asarray(members)
+                else:
+                    stats["dropped"] += 1
+
+
 def _make_bucket_pair_kernel(
     n_hashes: int,
     max_bucket: int,
@@ -414,18 +339,13 @@ def _make_bucket_pair_kernel(
     mh_in_payload_prefix: bool = False,
 ):
     """mapInPandas kernel factory for banded-LSH pair generation: one
-    partition's bucket rows arrive co-partitioned by the bucket key, so the
-    ENTIRE cap/split/self-join/verify policy of _banded_bucket_frames plus
-    the per-pair verifier runs partition-locally in numpy — one exchange
-    and one stage where the declarative formulation paid a persist, two
-    size aggregates, two broadcast barriers, two anti/semi probes, and two
-    self-joins. Bucket membership, the split policy (oversized buckets
-    re-keyed by the two half-signature tuples, still-oversized sub-buckets
-    dropped), and every verifier value are identical to the declarative
-    path: Jaccard/estimate divisions are int-derived float64 ops — the
-    same IEEE-754 computation Catalyst's size()/lit division performs —
-    and grouping by the raw half-signature TUPLE is equality-equivalent to
-    grouping by its md5 (the md5 was only an equality proxy).
+    partition's bucket rows arrive co-partitioned by the bucket key, so
+    _bucket_policy runs partition-locally and every post-policy bucket's
+    pairs are verified here in numpy — one exchange and one stage. The
+    verifier values equal the declarative self-join's (tests/
+    reference_impls.py): Jaccard/estimate divisions are int-derived
+    float64 ops — the same IEEE-754 computation Catalyst's size()/lit
+    division performs.
 
     modes: 'jaccard'  — exact distinct-shingle Jaccard >= threshold over
                         payload_col (array<string>, pre-distinct);
@@ -439,33 +359,19 @@ def _make_bucket_pair_kernel(
     spark.nametag.lsh.bucketPartitions), so at scale partitions stay
     surface-sized. Emitted pairs are (lo, hi) per bucket occurrence —
     exactly the l._k < r._k self-join rows."""
-    half = n_hashes // 2
 
     def kernel(batches):
         import numpy as np
         import pandas as pd
 
-        pdfs = [p for p in batches if len(p)]
-        if not pdfs:
+        pdf = _partition_frame(batches)
+        if pdf is None:
             return
-        pdf = pdfs[0] if len(pdfs) == 1 else pd.concat(pdfs, ignore_index=True)
         ks = pdf["_k"].to_numpy()
         payload = pdf[payload_col].to_numpy() if payload_col else None
         # split keys come from the payload's prefix (prefix-stable family)
         # when the caller didn't ship a separate _mh array
         mh = payload if mh_in_payload_prefix else pdf["_mh"].to_numpy()
-        bandv = pdf["band"].to_numpy()
-        sigv = pdf["sig"].to_numpy()
-        if has_blk:
-            blkv = pdf["_blk"].to_numpy()
-            keys = np.array(
-                [f"{x}\x00{b}\x00{s}" for x, b, s in zip(blkv, bandv, sigv)], dtype=object
-            )
-        else:
-            keys = np.array([f"{b}\x00{s}" for b, s in zip(bandv, sigv)], dtype=object)
-        uniq, inv = np.unique(keys, return_inverse=True)
-        order = np.argsort(inv, kind="stable")
-        bounds = np.searchsorted(inv[order], np.arange(len(uniq) + 1))
         out_a: list = []
         out_b: list = []
 
@@ -532,26 +438,11 @@ def _make_bucket_pair_kernel(
             n_pending = 0
             return pd.DataFrame({"src": a, "dst": b})
 
-        for g in range(len(uniq)):
-            idx = order[bounds[g] : bounds[g + 1]]
-            s = len(idx)
-            if s < 2:
+        stats = {"split": 0, "dropped": 0}
+        for idx in _bucket_policy(pdf, has_blk, mh, n_hashes, max_bucket, stats):
+            if len(idx) < 2:
                 continue
-            if s <= max_bucket:
-                verify(idx)
-            else:
-                # oversized: re-key every member by BOTH half-signature
-                # tuples (the declarative explode put each row in sub-bucket
-                # #1 AND #2); sub-buckets still over the cap are dropped
-                for sl in (slice(0, half), slice(half, n_hashes)):
-                    sub: dict = {}
-                    for i in idx:
-                        sub.setdefault(
-                            np.asarray(mh[i], dtype=np.int64)[sl].tobytes(), []
-                        ).append(i)
-                    for members in sub.values():
-                        if 2 <= len(members) <= max_bucket:
-                            verify(np.asarray(members))
+            verify(idx)
             # stream emitted pairs out in bounded chunks instead of holding
             # every pair of the partition for one final yield
             if n_pending >= 500_000:
@@ -562,29 +453,21 @@ def _make_bucket_pair_kernel(
     return kernel
 
 
-def _kernel_banded_pairs(
+def _bucket_exchange(
     sig: DataFrame,
     n_hashes: int,
     bands: int,
-    max_bucket: int,
     block: bool,
     payload_col: str | None,
-    mode: str,
-    threshold: float | None = None,
-    cut: float | None = None,
-    n_sig: int | None = None,
     mh_in_payload_prefix: bool = False,
 ) -> DataFrame:
-    """Banding + one hash exchange + the partition-local pair kernel.
-
-    sig: one row per key with _k, mh0..mh{n_hashes-1}, optional _blk, and
-    the verifier payload column. Returns (src, dst) typed like _k, one row
-    per verified in-bucket pair occurrence (callers distinct() if they need
-    the pair LIST semantics).
+    """Bucket rows (_k, [_blk], [payload], [_mh], band, sig), one per key
+    and band, after ONE hash exchange on the bucket key (_blk, band, sig):
+    every bucket is whole inside one partition for _bucket_policy.
 
     mh_in_payload_prefix: the payload array's first n_hashes elements ARE
     mh0..mh{n_hashes-1} (prefix-stable affine family) — skip carrying the
-    redundant _mh array through the exchange; the kernel slices the
+    redundant _mh array through the exchange; the policy slices the
     payload for the oversized-bucket split keys instead."""
     band_cols = _band_columns(n_hashes, bands)
     keep = ["_k"] + (["_blk"] if block else []) + ([payload_col] if payload_col else [])
@@ -612,7 +495,29 @@ def _kernel_banded_pairs(
     if n_part <= 0:
         n_part = spark.sparkContext.defaultParallelism
     bucket_key = (["_blk"] if block else []) + ["band", "sig"]
-    buckets = buckets.repartition(n_part, *bucket_key)
+    return buckets.repartition(n_part, *bucket_key)
+
+
+def _kernel_banded_pairs(
+    sig: DataFrame,
+    n_hashes: int,
+    bands: int,
+    max_bucket: int,
+    block: bool,
+    payload_col: str | None,
+    mode: str,
+    threshold: float | None = None,
+    cut: float | None = None,
+    n_sig: int | None = None,
+    mh_in_payload_prefix: bool = False,
+) -> DataFrame:
+    """Banding + one hash exchange + the partition-local pair kernel.
+
+    sig: one row per key with _k, mh0..mh{n_hashes-1}, optional _blk, and
+    the verifier payload column. Returns (src, dst) typed like _k, one row
+    per verified in-bucket pair occurrence (callers distinct() if they need
+    the pair LIST semantics)."""
+    buckets = _bucket_exchange(sig, n_hashes, bands, block, payload_col, mh_in_payload_prefix)
     kt = sig.schema["_k"].dataType.simpleString()
     kernel = _make_bucket_pair_kernel(
         n_hashes, max_bucket, mode, block, payload_col,
@@ -632,45 +537,51 @@ def lsh_bucket_histogram(
     max_bucket: int = 200,
     block_col: str | None = None,
 ) -> dict:
-    """Post-policy bucket-size histogram of the EXACT banding/split/cap
-    policy lsh_similarity_edges runs (via the _banded_bucket_frames
-    reference, parity-pinned to the kernel), plus
-    the in-bucket candidate-pair mass the downstream self-join will pay.
+    """Post-policy bucket sizes of the rows lsh_similarity_edges buckets:
+    the same guard, banding and exchange (_bucket_exchange) and the same
+    _bucket_policy, with a per-partition size kernel in place of the pair
+    verify; the partial counts are summed on the driver (one collect).
 
     Returns {"hist_log2": {bin: n_buckets}, "n_buckets", "max_bucket_size",
-    "candidate_pairs"} where hist_log2 bins buckets by floor(log2(size)) and
-    candidate_pairs = sum over buckets of size*(size-1)/2 — the quantity
-    that must stay linear-ish in surfaces for the resolve phase to scale."""
-    # the histogram only counts bucket members — drop the shingle payload
-    # so the persisted bucket table is keys-only (the fused edges path at
-    # the same scale holds ITS table in the same heap; carrying payloads
-    # twice OOMs an 8g local JVM)
-    carry = ["_k"] + (["_blk"] if block_col is not None else [])
-    sig = _signatures(df, text_col, key_col, n_hashes, k, block_col).drop("_sh")
-    ok, split_ok = _banded_bucket_frames(
-        sig, carry, n_hashes, bands, max_bucket,
-        block_cols=["_blk"] if block_col is not None else (),
-    )
-    ok = ok.unionByName(split_ok)
-    key = (["_blk"] if block_col is not None else []) + ["band", "sig"]
-    sizes = ok.groupBy(*key).count().persist()
-    _register_persisted(sizes)
-    hist_rows = (
-        sizes.select(F.floor(F.log2("count")).cast("int").alias("b"))
-        .groupBy("b")
-        .count()
-        .collect()
-    )
-    agg = sizes.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.max("count").alias("mx"),
-        F.sum(F.col("count") * (F.col("count") - 1) / 2).alias("pairs"),
-    ).collect()[0]
+    "candidate_pairs", "split_buckets", "dropped_buckets"}: hist_log2 bins
+    buckets (singletons included) by floor(log2(size)); candidate_pairs =
+    sum over buckets of size*(size-1)/2, the in-bucket pair mass the verify
+    pays, which must stay linear-ish in surfaces for the resolve phase to
+    scale; split_buckets counts buckets over max_bucket that were split,
+    dropped_buckets the sub-buckets still over it."""
+    has_blk = block_col is not None
+
+    def kernel(batches):
+        import pandas as pd
+
+        pdf = _partition_frame(batches)
+        if pdf is None:
+            return
+        stats = {"split": 0, "dropped": 0}
+        hist = [0] * 64
+        mx = pairs = 0
+        for idx in _bucket_policy(pdf, has_blk, pdf["_mh"].to_numpy(), n_hashes, max_bucket, stats):
+            s = len(idx)
+            hist[s.bit_length() - 1] += 1
+            mx = max(mx, s)
+            pairs += s * (s - 1) // 2
+        yield pd.DataFrame([{"hist": hist, "mx": mx, "pairs": pairs, **stats}])
+
+    sig = _signatures(df, text_col, key_col, n_hashes, k, block_col)
+    # the shingle payload only guards (NULL text buckets nowhere); the
+    # exchange carries keys and signatures alone
+    buckets = _bucket_exchange(sig, n_hashes, bands, has_blk, "_sh").drop("_sh")
+    rows = buckets.mapInPandas(
+        kernel, schema="hist array<bigint>, mx bigint, pairs bigint, split bigint, dropped bigint"
+    ).collect()
+    hist = [sum(col) for col in zip(*(r["hist"] for r in rows))]
     return {
-        "hist_log2": {int(r["b"]): int(r["count"]) for r in sorted(hist_rows, key=lambda r: r["b"])},
-        "n_buckets": int(agg["n"]),
-        "max_bucket_size": int(agg["mx"] or 0),
-        "candidate_pairs": int(agg["pairs"] or 0),
+        "hist_log2": {b: n for b, n in enumerate(hist) if n},
+        "n_buckets": sum(hist),
+        "max_bucket_size": max((r["mx"] for r in rows), default=0),
+        "candidate_pairs": sum(r["pairs"] for r in rows),
+        "split_buckets": sum(r["split"] for r in rows),
+        "dropped_buckets": sum(r["dropped"] for r in rows),
     }
 
 
@@ -686,15 +597,12 @@ def lsh_similarity_edges(
     block_col: str | None = None,
     dedupe: bool = True,
 ) -> DataFrame:
-    """LSH candidate generation with the exact-Jaccard verify FUSED into the
-    bucket self-join: the shingle set rides along with the band rows, so the
-    within-bucket join immediately produces both shingle arrays and the
-    similarity predicate applies in the same stage — two fewer shuffles than
-    lsh_candidate_pairs + jaccard_filter (which join the shingles back on).
-    Returns (src, dst) with src < dst. Used by resolve_entities, where the
-    surface table is small relative to the mention table and per-stage
-    latency dominates; the un-fused building blocks remain for callers that
-    want candidates and verification separately.
+    """Minhash-LSH blocking with the exact distinct-shingle Jaccard verify:
+    (src, dst) pairs with src < dst whose Jaccard is >= threshold and which
+    share a post-policy bucket (_bucket_policy). The shingle set rides along
+    with the bucket rows, so the verify needs no join back. Used by
+    resolve_entities; tests/reference_impls.py holds the declarative
+    self-join reference it is parity-tested against.
 
     dedupe=False skips the final distinct: a pair passing the verify in
     several shared bands is then emitted once per band. Connectivity-only
@@ -710,22 +618,14 @@ def lsh_similarity_edges(
     then drop (measured on the 240k-surface wide-vocab corpus:
     485 oversized buckets, max 12,895).
 
-    Physical plan (optimization round 8): bucket rows repartition ONCE on
-    the bucket key and the whole cap/split/self-join/exact-Jaccard policy
-    runs partition-locally in an Arrow/numpy kernel
-    (_make_bucket_pair_kernel): all members of a bucket are co-partitioned,
-    so the oversized sizes the declarative path computed with global
-    aggregates + broadcast anti/semi probes are known locally, and the
-    within-bucket pair verify is a per-bucket matmul instead of a
-    self-join. Two stages total; the previous formulation paid a persist,
-    two size aggregates, two broadcast barriers, and two self-joins with a
-    ~10-expression fused verify. The r7 two-tier hash prefilter
-    (hash-Jaccard with the collision-free guard) is superseded: the kernel
-    computes the exact distinct-shingle Jaccard directly, so the guarded
-    prefilter's soundness argument — and its collision bypass — are
-    trivially preserved (pinned by the same collision test). Edge SETS are
-    identical; per-band duplicate occurrences (dedupe=False) are emitted
-    per bucket exactly as the self-join did."""
+    Physical plan: bucket rows repartition ONCE on the bucket key
+    (_bucket_exchange) and the policy plus the pair verify run
+    partition-locally in an Arrow/numpy kernel (_make_bucket_pair_kernel):
+    all members of a bucket are co-partitioned, so oversized buckets are
+    known locally and the within-bucket verify is a per-bucket matmul
+    instead of a self-join. Two stages total. Per-band duplicate
+    occurrences (dedupe=False) are emitted per bucket exactly as the
+    reference self-join does."""
     sig = _signatures(df, text_col, key_col, n_hashes, k, block_col)
     out = _kernel_banded_pairs(
         sig, n_hashes, bands, max_bucket, block_col is not None, "_sh",

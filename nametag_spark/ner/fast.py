@@ -807,7 +807,14 @@ class StagePartialScorer:
         FastFeaturizer.pins_batch as the position-sorted (pos, fid) pair.
         Pinned rows are still scored (cheap) and the caller overwrites them,
         as the reference does. prev_b/prev_e: flat previous-stage decode
-        arrays (every token known); None on the first stage."""
+        arrays (every token known); None on the first stage.
+
+        A token's weights are summed in a different association from
+        NerModel.recognize_sentence (omnipresent row + per-form partial
+        sums + the summed extra events, where the reference adds every
+        feature left to right), so per-stage probabilities may differ from
+        the reference in the last ulps (up to 4.4e-16 seen); decisions are
+        equal."""
         net = self.net
         n_out = net.n_out
         m = self.maxw

@@ -339,7 +339,9 @@ def test_gazetteers_enhanced_walk_events_in_reference_order(tmp_path, monkeypatc
     recognize_sentence, and so do each stage's probabilities up to the
     scorer's float association (it adds per-form partial sums and the
     summed events to the omnipresent weights, where the reference sums
-    every feature of a token left to right)."""
+    every feature of a token left to right). That association is why the
+    probabilities are checked to atol=1e-14, not for equality: they may
+    differ in the last ulps (up to 4.4e-16 seen)."""
     import numpy as np
 
     from nametag_spark.ner import core

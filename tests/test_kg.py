@@ -10,7 +10,8 @@ from pyspark.sql import functions as F
 from nametag_spark.kg.resolution import (
     connected_components,
     jaccard_filter,
-    lsh_candidate_pairs,
+    lsh_bucket_histogram,
+    lsh_similarity_edges,
     minhash_signatures,
     resolve_entities,
 )
@@ -276,8 +277,9 @@ def test_minhash_similar_strings_collide(spark):
         (3, "completely different words here"),
     ]
     df = spark.createDataFrame(rows, ["id", "norm"])
-    pairs = lsh_candidate_pairs(df, "norm", "id", n_hashes=12, bands=6).collect()
-    got = {(r["a"], r["b"]) for r in pairs}
+    # threshold 0: the verify passes every candidate the banding produces
+    pairs = lsh_similarity_edges(df, "norm", "id", n_hashes=12, bands=6, threshold=0.0).collect()
+    got = {(r["src"], r["dst"]) for r in pairs}
     assert (1, 2) in got
     assert (1, 3) not in got and (2, 3) not in got
 
@@ -544,3 +546,68 @@ def test_lsh_edges_string_keys_and_tiny_arrow_batches(spark):
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
     assert tiny == baseline
+
+
+def _widevocab_surfaces(spark):
+    """470 distinct (type, norm) surfaces of a vocab_scale=10 corpus's gold
+    mentions, keyed like resolve_entities' surface table."""
+    from nametag_spark.data.synth import synth_transcripts
+    from nametag_spark.kg.resolution import canonicalize_mentions
+
+    _, gdf = synth_transcripts(n_conversations=20, seed=5, vocab_scale=10)
+    surfaces = (
+        canonicalize_mentions(spark.createDataFrame(gdf[["type", "surface"]]))
+        .where(F.length("norm") > 0)
+        .select("type", "norm")
+        .distinct()
+        .selectExpr("concat(type, '\t', norm) AS k", "norm", "type")
+    )
+    return spark.createDataFrame(surfaces.toPandas())
+
+
+# small enough that the bucket policy both splits and drops on that table
+_SPLIT_CAP = 3
+
+
+def test_lsh_edges_jaccard_mode_matches_reference(spark):
+    """The pair kernel's jaccard mode with a block column, with buckets
+    split and dropped, equals the declarative self-join reference: as a
+    set (dedupe=True) and as a multiset, one row per bucket occurrence
+    (dedupe=False)."""
+    from tests.reference_impls import lsh_similarity_edges as reference_edges
+
+    surfaces = _widevocab_surfaces(spark)
+    hist = lsh_bucket_histogram(surfaces, "norm", "k", max_bucket=_SPLIT_CAP, block_col="type")
+    assert hist["split_buckets"] > 0 and hist["dropped_buckets"] > 0
+    kw = dict(max_bucket=_SPLIT_CAP, block_col="type")
+    want = sorted(map(tuple, reference_edges(surfaces, "norm", "k", **kw).collect()))
+    assert len(want) > len(set(want))  # some pair shares several buckets
+    for dedupe, expected in ((True, sorted(set(want))), (False, want)):
+        got = lsh_similarity_edges(surfaces, "norm", "k", dedupe=dedupe, **kw).collect()
+        assert sorted(map(tuple, got)) == expected, dedupe
+
+
+def test_lsh_bucket_histogram_matches_reference(spark):
+    """lsh_bucket_histogram reports the pair kernel's policy: its counts
+    equal the reference frames', and rows the kernel never buckets (NULL
+    text) are not counted."""
+    from tests.reference_impls import bucket_histogram
+
+    surfaces = _widevocab_surfaces(spark)
+    kw = dict(max_bucket=_SPLIT_CAP, block_col="type")
+    got = lsh_bucket_histogram(surfaces, "norm", "k", **kw)
+    assert got == bucket_histogram(surfaces, "norm", "k", **kw)
+    assert got["split_buckets"] > 0 and got["dropped_buckets"] > 0
+
+    org = [("ORG\tacme corp", "acme corp", "ORG"),
+           ("ORG\tacme corporation", "acme corporation", "ORG")]
+    nulls = [(f"PER\t{i}", None, "PER") for i in range(5)]
+    schema = "k string, norm string, type string"
+    with_nulls = lsh_bucket_histogram(
+        spark.createDataFrame(org + nulls, schema), "norm", "k", block_col="type"
+    )
+    org_only = lsh_bucket_histogram(
+        spark.createDataFrame(org, schema), "norm", "k", block_col="type"
+    )
+    assert with_nulls == org_only
+    assert with_nulls["max_bucket_size"] == 2

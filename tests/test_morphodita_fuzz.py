@@ -5,6 +5,7 @@ must be byte-identical to run_ner's output — entities, nesting, order."""
 
 import gzip
 import os
+import random
 import sys
 
 import pytest
@@ -13,9 +14,56 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from nametag_spark.model.binary_reader import load_binary_ner
 from nametag_spark.sinks.render import render_conll
-from scripts.gen_ner_fuzz import sentences
+from scripts.gen_ner_fuzz import EXTRAS, POOLS, sentences
 
 FIX = os.path.join(os.path.dirname(__file__), "..", "fixtures", "morphodita")
+
+_SYLLABLES = (
+    "ba be bo bu da de do du ga ge go gu cha che la le lo lu ma me mo mu "
+    "na ne no nu pa pe po pu ra re ro ru sa se so su ta te to tu va ve vo "
+    "vu za ze zo zu pra pre sta sto kra kre vla vle dra dre"
+).split()
+
+
+def _pseudo(rng: random.Random) -> str:
+    return "".join(rng.choice(_SYLLABLES) for _ in range(rng.randint(2, 4)))
+
+
+def corpus(kind: str, n_sentences: int, seed: str):
+    """List of sentence texts (space-joined tokens), all distinct."""
+    rng = random.Random(f"kernel_ab:{kind}:{seed}")
+    pool = POOLS["cs"]
+    out = []
+    seen = set()
+    for i in range(n_sentences):
+        k = rng.randint(3, 12)
+        toks = []
+        for _t in range(k):
+            r = rng.random()
+            if kind == "wide":
+                if r < 0.50:
+                    toks.append(_pseudo(rng))
+                elif r < 0.65:
+                    toks.append(_pseudo(rng).capitalize())
+                elif r < 0.92:
+                    toks.append(rng.choice(pool["vocab"]))
+                else:
+                    toks.append(rng.choice(EXTRAS))
+            else:
+                if r < 0.72:
+                    toks.append(rng.choice(pool["vocab"]))
+                elif r < 0.92:
+                    toks.append(rng.choice(pool["oov"]))
+                else:
+                    toks.append(rng.choice(EXTRAS))
+        if rng.random() < 0.8:
+            toks.append(".")
+        t = " ".join(toks)
+        if t in seen:
+            t = t + f" {i}"
+        seen.add(t)
+        out.append(t)
+    return out
 
 
 @pytest.mark.parametrize("lang,model", [
@@ -118,10 +166,6 @@ def test_ner_tag_columns_batch_parity():
     sentences within one batch (the gaz/pins memo dict is shared across
     Sentence instances of the same text) and all-hit re-batches returning
     the cached entries themselves."""
-    import random
-
-    from scripts.kernel_ab import corpus
-
     m_batch = load_binary_ner(os.path.join(FIX, "tiny_cs.ner"))
     m_ref = load_binary_ner(os.path.join(FIX, "tiny_cs.ner"))
     rng = random.Random("batch-parity")

@@ -166,16 +166,13 @@ def test_rp_lsh_recall(spark, embeddings):
 def test_minhash_dup_pairs_matches_staged_reference(spark, documents):
     """minhash_dup_pairs was rewritten (one full-width signature pass,
     in-join estimate, semi-pruned verify); pin its output against the
-    original staged pipeline (lsh_candidate_pairs + estimate join +
-    jaccard_filter), which still exists as building blocks."""
+    original staged pipeline (the declarative lsh_candidate_pairs
+    reference + estimate join + jaccard_filter)."""
     import math
 
-    from nametag_spark.kg.resolution import (
-        jaccard_filter,
-        lsh_candidate_pairs,
-        minhash_signatures,
-    )
+    from nametag_spark.kg.resolution import jaccard_filter, minhash_signatures
     from nametag_spark.ops.dedup import minhash_dup_pairs
+    from tests.reference_impls import lsh_candidate_pairs
 
     def staged(df, n_hashes, bands, k, threshold):
         base = df.select(

@@ -17,7 +17,6 @@ from collections import Counter
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 ALLOWED = {
-    "lsh_candidate_pairs": "parity reference the resolution kernel tests compare against",
     "read_transcript_stream": "streaming KG entry point (source half)",
     "run_incremental_kg": "streaming KG entry point (sink half)",
 }
